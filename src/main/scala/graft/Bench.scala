@@ -169,20 +169,14 @@ object Bench {
       s"bench_$sfTag.json"
     else s"bench_trial_$sfTag.json"
 
+  /** The measured session: [[graft.core.GraftSession.local]], so Bench,
+    * Verify and the specs run one engine conf. */
+  private[graft] def session(cpus: Int): SparkSession =
+    graft.core.GraftSession.local("graft-bench", cores = cpus)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // static conf (builder-time only; tune() below can't set it): the
-      // 155-gate loop holds >>100 codegen units — the 100-entry default
-      // recompiles every gate's generated classes on every pass
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    graft.core.GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(graft.core.GraftSession.cpus())
     // fixed (sorted) order: run-to-run and round-to-round comparable
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
     // warm up JVM/codegen/parquet-footer paths so the first timed query

@@ -81,7 +81,7 @@ object ScaleCurve {
     // curve can produce the 8-vs-32-core pair at the derived SF — the
     // core-scaling signal sf0.1 alone cannot give (every gate there is
     // scheduling overhead, not data)
-    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cores = graft.core.GraftSession.cpus()
     val spark = graft.core.GraftSession.local("graft-scale", cores = cores)
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()

@@ -16,7 +16,7 @@ object SparkEntry {
     * The mart-shaped join+aggregate (SURVEY §2.3 J2 / §2.4 A1).
     */
   def entry(spark: SparkSession): DataFrame = {
-    GraftSession.tune(spark)
+    GraftSession.configure(spark)
     RelationalQueries.queries("j2_join_agg_mart")(spark, "/root/testdata/sf0.001")
   }
 

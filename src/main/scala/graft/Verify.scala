@@ -4,21 +4,17 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** The dumped session: [[graft.core.GraftSession.local]], so Verify,
+    * Bench and the specs run one engine conf. */
+  private[graft] def session(cpus: Int): SparkSession =
+    graft.core.GraftSession.local("graft-verify", cores = cpus)
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // optional 3rd arg: comma-separated query names (local iteration only;
     // the driver always runs the full set)
     val only = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    graft.core.GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(graft.core.GraftSession.cpus())
     new java.io.File(outDir).mkdirs()
     // A query that throws must surface as a RED row in the driver's
     // compare, never as an omission: write a sentinel single-row parquet

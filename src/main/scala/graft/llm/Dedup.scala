@@ -732,6 +732,11 @@ object Dedup {
             coalesce(col("jump"), col("cluster_id"))).as("cluster_id"),
           col("cluster_id").as("prev"))
         .localCheckpoint(true)
+      // the eager checkpoint above consumed the previous round's labels
+      // (and `changed`, a view of the same checkpoint): free its blocks
+      // now instead of leaving them to ContextCleaner, which reclaims
+      // them only after a GC happens to collect the Dataset
+      graft.core.CacheUtil.freeCheckpoint(labels)
       changed = updated.filter(col("cluster_id") < col("prev"))
         .select("id", "cluster_id")
       converged = changed.isEmpty
@@ -740,6 +745,9 @@ object Dedup {
       lastCcRounds = iter
     }
     edges.unpersist()
+    // the final labels are checkpointed, so nothing reads the pair
+    // checkpoint any more; the labels themselves are the caller's
+    graft.core.CacheUtil.freeCheckpoint(p)
     if (!converged)
       throw new IllegalStateException(
         s"duplicateClusters did not converge in $maxIterations rounds " +
@@ -964,6 +972,13 @@ object Dedup {
     *                    quadratic posting-list blowup. ON by default
     *                    ([[DefaultMaxDocFreq]]); pass None for exact
     *                    all-pairs semantics on corpora known clean.
+    *
+    * With a cap, the (shingle, id) posting table is persisted
+    * (MEMORY_AND_DISK) and not unpersisted here, because the returned
+    * plan reads it. The caller owns its lifetime: unpersist or
+    * `clearCache` after materializing the result. A long-lived session
+    * that does neither keeps one posting table per call, and disk
+    * blocks survive LRU eviction.
     */
   def ngramJaccardPairs(df: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", shingleN: Int = 3,

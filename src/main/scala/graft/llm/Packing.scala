@@ -30,6 +30,13 @@ import org.apache.spark.sql.functions._
   */
 object Packing {
 
+  /** Assign each row of `df` a `seq_id` (see the object doc).
+    * Precondition: `nTokensCol` is non-negative, as token counts are.
+    * Each shard's total is read off its within-shard cumsum's maximum,
+    * which equals the sum only for non-negative counts; a negative count
+    * would silently shift the offsets of every later shard instead of
+    * failing. Not checked here: a check would cost a pass over `df`.
+    */
   def packSequences(df: DataFrame, budgetTokens: Long,
       byCol: String = "source", idCol: String = "doc_id",
       nTokensCol: String = "n_tokens",

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Staged
 import graft.functions.roundDet
 
 /** Two-level IVF coarse quantizer: flat `centroids` at level 1, plus a
@@ -438,47 +439,6 @@ object Similarity {
       .flatten.toSet
   }
 
-  /** Inferred index schema per root path, so repeated index reads (a
-    * probed search per query batch, cell stats per maintenance pass)
-    * skip the parquet footer-inference Spark job — at a 100 TB index
-    * that job is a footer sweep over every cell directory, per search.
-    * Populated by the first read; INVALIDATED by the overwrite writers
-    * ([[ivfWriteIndex]], [[ivfPqWriteIndex]]), which may change the
-    * column set at a reused path. Append/recluster writers keep the
-    * schema by construction (mode("append") into the same layout), so
-    * they leave the memo alone.
-    *
-    * SINGLE-SESSION ASSUMPTION (documented engine contract): the memo
-    * trusts that every writer that can change a committed index's
-    * column set at a reused path runs through THIS process's writer
-    * entry points. An external/second process rewriting an index layout
-    * in place at the same path would be read with the stale schema
-    * (renamed columns surface as nulls). That matches the engine's
-    * single-session ownership model for index roots — the same
-    * assumption the hard-link [[graft.queries]] clone and the delta-log
-    * commit protocol rest on. Bounded at [[SchemaMemoMax]] paths
-    * (per-invocation clone roots accumulate fresh paths forever;
-    * entries are small, cleared wholesale on overflow — a miss only
-    * costs one re-inference).
-    */
-  private val SchemaMemoMax = 512
-  private val indexSchemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
-  private def readIndexParquet(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    Option(indexSchemaMemo.get(path)) match {
-      case Some(sch) => spark.read.schema(sch).parquet(path)
-      case None =>
-        val df = spark.read.parquet(path)
-        if (indexSchemaMemo.size() > SchemaMemoMax) indexSchemaMemo.clear()
-        indexSchemaMemo.putIfAbsent(path, df.schema)
-        df
-    }
-  /** Test seam: what the memo holds for `path` (None = will re-infer). */
-  private[graft] def memoizedIndexSchema(path: String)
-      : Option[org.apache.spark.sql.types.StructType] =
-    Option(indexSchemaMemo.get(path))
-
   /** Per-cell row counts — the audit that decides when a drifting
     * append stream has bloated hot cells past the recluster threshold.
     * Partition-column-only aggregation: footer-level, no data read.
@@ -486,7 +446,7 @@ object Similarity {
   def ivfCellStats(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
     val live = ivfLiveCells(spark, path)
-    val base = readIndexParquet(spark, path)
+    val base = Staged.read(spark, path)
     val scoped = live match {
       case Some(cells) =>
         base.filter(col("cid").isin(cells.toSeq.sorted.map(Int.box): _*))
@@ -514,7 +474,7 @@ object Similarity {
         col(vecCol).cast("array<double>")) > 0)
       .withColumn("cid", quantizer.cidExpr(col(vecCol).cast("array<double>")))
       .write.mode("overwrite").partitionBy("cid").parquet(path)
-    indexSchemaMemo.remove(path) // overwrite may change the column set
+    Staged.forget(path) // overwrite may change the column set
     writeLiveCells(spark, path, presentCells(spark, path),
       mergeTip = false)
   }
@@ -777,7 +737,7 @@ object Similarity {
       // recluster — PQ codes are global subspace state, independent of
       // which cell a vector lives in, so moving a row never re-encodes
       // it — and any future payload column is likewise preserved.
-      val cell = readIndexParquet(spark, path).filter(col("cid") === cid)
+      val cell = Staged.read(spark, path).filter(col("cid") === cid)
         .drop("cid")
         .localCheckpoint(true)
       try {
@@ -898,7 +858,7 @@ object Similarity {
       .map(_.getInt(0)).distinct
       .filter(c => live.forall(_.contains(c)))
       .sorted
-    val scan = readIndexParquet(spark, indexPath)
+    val scan = Staged.read(spark, indexPath)
       .filter(col("cid").isin(cells.map(Int.box).toIndexedSeq: _*))
     // plan self-assert behind the audit toggle (the BandedIndex
     // auditPartitions rule): partitionsRead forces an extra planning
@@ -1355,7 +1315,7 @@ object Similarity {
       .withColumn("codes", graft.expr.native.pqEncode(
         unitVec(col(vecCol).cast("array<double>")), codebooks))
       .write.mode("overwrite").partitionBy("cid").parquet(path)
-    indexSchemaMemo.remove(path) // overwrite may change the column set
+    Staged.forget(path) // overwrite may change the column set
     writeLiveCells(spark, path, presentCells(spark, path),
       mergeTip = false)
   }

@@ -14,7 +14,7 @@ package graft.queries
   *
   * Each entry here splits that gate's oracle into `setup` (statements
   * that materialize the trained state into `bench_*` DuckDB temp
-  * tables — run ONCE, untimed, exactly like the Spark side's *Once
+  * tables — run ONCE, untimed, exactly like the Spark side's graft.core.Staged
   * staging) and `query` (the scoring pass over the staged state — the
   * timed statement). `tools/duckdb_baseline.py` consumes the split and
   * REFUSES to use it unless `setup` + `query` reproduce the full
@@ -37,7 +37,7 @@ object BenchOracles {
   private val all0: Map[String, BenchOracle] = Map(
 
     // Spark stages the trained add-1 bigram LM as a parquet model
-    // artifact (bigramModelOnce); the timed pass explodes the docs into
+    // artifact (Staged "bigram-lm"); the timed pass explodes the docs into
     // bigrams and joins the model. Setup trains the same (bigram, logp)
     // table; the timed query is the same explode + join + per-doc avg.
     "x_bigram_logprob" -> BenchOracle(
@@ -161,7 +161,7 @@ object BenchOracles {
            FROM b GROUP BY 1"""),
 
     // Spark stages the near-dup cluster table as dedup-pipeline output
-    // (clusterTableOnce "minhashJ1"); the timed pass scans the twinned
+    // (Staged "clusters-minhashJ1"); the timed pass scans the twinned
     // corpus, joins the staged table, and replays the md5-bucket split.
     "x_cluster_safe_split" -> BenchOracle(
       setup = Seq(
@@ -209,8 +209,8 @@ object BenchOracles {
                AS n_twins
            FROM sp GROUP BY 1"""),
 
-    // Spark stages the normalized-equality cluster table (clusterTableOnce
-    // "normEq"); the timed pass computes doc lengths, joins the staged
+    // Spark stages the normalized-equality cluster table (Staged
+    // "clusters-normEq"); the timed pass computes doc lengths, joins the staged
     // table, and runs the per-cluster argmax.
     "x_cluster_rep" -> BenchOracle(
       setup = Seq(
@@ -248,7 +248,7 @@ object BenchOracles {
            FROM r WHERE rk = 1"""),
 
     // Spark stages the capstone's verified near-dup cluster table
-    // (clusterTableOnce "minhashHalfJ1" — labels for docs in classes of
+    // (Staged "clusters-minhashHalfJ1" — labels for docs in classes of
     // size ≥ 2, exactly duplicateClusters' output); the timed pass is
     // the rest of the export composition: best-copy selection over the
     // staged labels, token floor, budget mix, packing, shard audit.
@@ -320,7 +320,7 @@ object BenchOracles {
              max(ok)::BIGINT AS order_max
            FROM keyed GROUP BY 1"""),
 
-    // Spark stages BM25 corpus stats (bm25StatsOnce: N, avgdl, idf per
+    // Spark stages BM25 corpus stats (Staged "bm25-…": N, avgdl, idf per
     // term); the timed pass is the tf explode + scoring + top-k.
     "x_bm25_search" -> BenchOracle(
       setup = Seq(
@@ -359,7 +359,7 @@ object BenchOracles {
            SELECT doc_id, score_u FROM agg
            ORDER BY score_u DESC, doc_id LIMIT 20"""),
 
-    // Spark stages the z-order grid bounds (zorderBoundsOnce: 2 longs
+    // Spark stages the z-order grid bounds (Staged "zorder-bounds": 2 longs
     // per dim); the timed pass is the pure keying projection + bucket agg.
     "x_zorder_key" -> BenchOracle(
       setup = Seq(
@@ -379,7 +379,7 @@ object BenchOracles {
              min(ts_us) AS min_ts, max(ts_us) AS max_ts
            FROM z GROUP BY 1"""),
 
-    // Spark stages the delivery-split boundary (splitBoundOnce "full":
+    // Spark stages the delivery-split boundary (Staged "split-bound-full":
     // one long of corpus config state — the experiment's DEFINITION of
     // where the resident index ends and the measured delivery begins);
     // the timed statement replays the sequential two-delivery plan
@@ -492,7 +492,7 @@ object BenchOracles {
            UNION ALL SELECT doc_id FROM admB"""),
 
     // The streaming gate stages its whole resident index offline
-    // (incDedupBaseOnce admits the even-half slice; the timed region is
+    // (Staged "st-inc-dedup-base" admits the even-half slice; the timed region is
     // ONE twin-wave admission through the micro-batch sink). Setup
     // builds the same resident index as a bench_ table; the timed
     // statement shingles the twin delivery for real and replays the
@@ -533,7 +533,7 @@ object BenchOracles {
            SELECT doc_id FROM bench_stinc_idx
            UNION ALL SELECT doc_id FROM adm2"""),
 
-    // Spark stages the DSIR log-ratio table (dsirTableOnce "full",
+    // Spark stages the DSIR log-ratio table (Staged "dsir-full",
     // 4096 rows); the timed pass is the per-doc bigram-bucket scoring.
     "x_dsir_weights" -> BenchOracle(
       setup = Seq(
@@ -583,8 +583,8 @@ object BenchOracles {
            LEFT JOIN bench_dsir_ratio_full ratio ON ratio.bucket = b.bucket
            GROUP BY 1"""),
 
-    // Same lifecycle for the half-corpus ratio table (dsirTableOnce
-    // "half"); the timed pass is scoring + the top-20% selection.
+    // Same lifecycle for the half-corpus ratio table (Staged
+    // "dsir-half"); the timed pass is scoring + the top-20% selection.
     "x_dsir_select" -> BenchOracle(
       setup = Seq(
         """CREATE OR REPLACE TEMP TABLE bench_dsir_ratio_half AS

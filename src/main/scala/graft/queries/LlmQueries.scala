@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Staged
 import graft.functions.roundDet
 import graft.llm.{Dedup, IncrementalDedup, Sampling, Similarity, TextAnalysis}
 import graft.sources.Tables
@@ -64,41 +65,6 @@ object LlmQueries {
     * engine and oracle sides. assert_true returns NULL on success, so the
     * coalesce keeps the arithmetic a single projection (no extra action).
     */
-  /** Per-JVM private root for every staged artifact and scratch index.
-    * `createTempDirectory` gives a fresh, owner-only (0700) directory
-    * per process — no other local user can pre-create or squat a
-    * predictable world-writable /tmp path, and two corpora can never
-    * collide: [[stagePath]] keys the subdirectory on the FULL md5 hex
-    * of the corpus dir (not a 32-bit hashCode, whose collisions — and
-    * `math.abs(Int.MinValue)` staying negative — could silently
-    * cross-wire two corpora's staged state). The path is a pure
-    * function of (key, dir), derived inside the same expression the
-    * memo maps store, so map key and path can never disagree. Staging
-    * memos are JVM-local anyway (ConcurrentHashMap), so a per-JVM root
-    * loses no cross-process reuse.
-    */
-  private lazy val stageRoot: String =
-    java.nio.file.Files.createTempDirectory("graft-stage-").toString
-  private def stagePath(key: String, dir: String): String = {
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    s"$stageRoot/$key-$hex"
-  }
-
-  /** Fresh on-disk root for gates exercising PERSISTED index state
-    * ([[IncrementalDedup]]): a fixed per-gate path (under the per-JVM
-    * [[stageRoot]]) wiped at gate entry, so repeated Verify/Bench
-    * invocations stay reproducible and nothing accumulates across
-    * passes.
-    */
-  private def freshIndexRoot(s: SparkSession, name: String): String = {
-    val root = s"$stageRoot/gate_$name"
-    val p = new org.apache.hadoop.fs.Path(root)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    root
-  }
-
   private def twinId(id: Column, offset: Long): Column =
     id + lit(offset) + coalesce(
       assert_true(id < lit(offset),
@@ -126,17 +92,6 @@ object LlmQueries {
     * mirroring twinId): the gate fails loudly instead of flaking if the
     * data ever grows such a natural duplicate cluster.
     */
-  /** Max exact-equal corpus rows per probe vector, per corpus dir —
-    * the ANN twin gates' parity precondition, staged once per corpus.
-    * A deterministic property of the INPUT corpus (the stored-fixture
-    * rule: the oracle never mirrors this guard — its twin computes
-    * plain cosine), so it is computed on first touch and thereafter
-    * enforced as a driver `require` per invocation, instead of an
-    * agg + join chain riding every measured search's output plan.
-    */
-  private val annParityMax =
-    new java.util.concurrent.ConcurrentHashMap[String, Long]()
-
   private def annTwinGate(s: SparkSession, dir: String,
       ann: (DataFrame, DataFrame) => DataFrame, k: Int): DataFrame = {
     val e = embs(s, dir).select(col("vec_id"), col("embedding"))
@@ -151,16 +106,20 @@ object LlmQueries {
       col("embedding").cast("array<double>").as("v"))
     // per-PROBE-vector corpus multiplicity: semi-join the corpus to the
     // (broadcast, ≤8-row) probe vector set, map-side filter + tiny agg.
-    // Evaluated eagerly on first touch per corpus (annParityMax), so the
-    // guard can never be optimized away — and never silently skipped.
-    val maxEq = annParityMax.computeIfAbsent(dir, _ => {
+    // A deterministic property of the INPUT corpus (the stored-fixture
+    // rule: the oracle never mirrors this guard — its twin computes
+    // plain cosine), so it is staged eagerly once per corpus and
+    // enforced as a driver `require` on every invocation: never
+    // optimized away, never silently skipped, and no agg + join chain
+    // riding every measured search's output plan.
+    val maxEq = Staged.value("ann-parity-max", dir) {
       val r = vecs
         .join(broadcast(probes.select(col("embedding").cast("array<double>")
           .as("v")).distinct()), Seq("v"), "left_semi")
         .groupBy(col("v")).agg(count(lit(1)).as("n_eq"))
         .agg(max(col("n_eq"))).head()
       if (r.isNullAt(0)) 0L else r.getLong(0)
-    })
+    }
     require(maxEq <= k,
       s"annTwinGate parity requires <= $k exact-equal corpus rows per " +
         s"probe (corpus has $maxEq); raise k or dedup the corpus")
@@ -192,68 +151,35 @@ object LlmQueries {
     })
   }
 
-  /** Offline-trained coarse quantizer, trained ONCE per (corpus, size)
-    * and reused by every subsequent invocation — the production IVF /
-    * SemDeDup lifecycle (train offline, ship the k×dim matrix as config
-    * state, zero training actions on the search path). Deterministic
-    * (seeded sample + quantized Lloyd means), so memoization never
-    * changes results.
-    */
-  private val quantizerCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Seq[Double]]]()
-  private def trainedQuantizer(s: SparkSession, dir: String,
-      nCells: Int): Seq[Seq[Double]] =
-    quantizerCache.computeIfAbsent(s"$dir#$nCells",
-      _ => Similarity.trainCentroids(embs(s, dir), nCells, lloydIters = 2))
-
-  /** Cell-partitioned IVF index, BUILT once per (source corpus) and
-    * reused by every subsequent search — the index sibling of
-    * [[trainedQuantizer]]: the build is the amortized offline step, the
-    * search path is what a gate/bench invocation measures. Deterministic
-    * (same corpus + quantizer → byte-identical layout), so memoization
-    * never changes results. Returns the index path.
-    */
-  private val ivfIndexBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def ivfIndexOnce(s: SparkSession, dir: String, corpus: DataFrame,
-      cents: Seq[Seq[Double]]): String =
-    ivfIndexBuilt.computeIfAbsent(dir, _ => {
-      val idx = stagePath("ivf-index", dir)
-      Similarity.ivfWriteIndex(corpus, cents, idx)
-      idx
-    })
-
-  /** Exact brute-force top-k answer set for the recall-contract gate,
-    * computed once per corpus and reused — the reference ANSWERS are a
+  /** Exact brute-force top-k answer set for a recall-contract gate,
+    * staged once per (corpus, key): the reference ANSWERS are a
     * deterministic fixture of the static corpus (|probes|·k rows, a
     * bounded constant), not the operator under measurement; each
-    * invocation still runs both approximate searches and both recall
-    * joins against it. The [[dsirTableOnce]] lifecycle: collected
-    * local rows, rebuilt as a DataFrame per call. */
-  private val exactTopkBuilt = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Long, Long, Long, Double)]]()
-  private def exactTopkOnce(s: SparkSession, dir: String, corpus: DataFrame,
-      queries: DataFrame, k: Int, key: String = ""): DataFrame = {
-    val rows = exactTopkBuilt.computeIfAbsent(s"$dir#$key", _ =>
+    * invocation still runs the approximate searches and recall joins
+    * against it. Collected to local rows, rebuilt as a DataFrame per
+    * call. */
+  private def exactTopk(s: SparkSession, dir: String, key: String,
+      corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val rows = Staged.value(s"exact-topk-$key", dir) {
       Similarity.bruteForceTopK(corpus, queries, k).collect()
         .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank"),
-          r.getAs[Long]("neighbor_id"), r.getAs[Double]("cos_sim"))).toSeq)
+          r.getAs[Long]("neighbor_id"), r.getAs[Double]("cos_sim"))).toSeq
+    }
     import s.implicits._
     rows.toDF("query_id", "rank", "neighbor_id", "cos_sim")
   }
 
   /** DSIR log-ratio table, TRAINED once per (corpus, slice key) and
-    * reused — the [[trainedQuantizer]] lifecycle: the (raw, target)
-    * distribution pair is corpus-level config state (4096 rows), so
-    * production scoring passes issue zero training actions. Collected
-    * to local rows (B-bounded) and rebuilt as a DataFrame per call. */
-  private val dsirTableBuilt = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Long, Double)]]()
-  private def dsirTableOnce(s: SparkSession, dir: String, key: String,
+    * reused: the (raw, target) distribution pair is corpus-level config
+    * state (4096 rows), so production scoring passes issue zero
+    * training actions. Collected to local rows (B-bounded) and rebuilt
+    * as a DataFrame per call. */
+  private def dsirTable(s: SparkSession, dir: String, key: String,
       raw: DataFrame, target: DataFrame): DataFrame = {
-    val rows = dsirTableBuilt.computeIfAbsent(s"$dir#$key", _ =>
+    val rows = Staged.value(s"dsir-$key", dir) {
       graft.llm.Selection.logRatioTable(raw, target, "text", 4096)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    }
     import s.implicits._
     rows.toDF("bucket", "log_ratio")
   }
@@ -284,7 +210,7 @@ object LlmQueries {
       (col("vec_id") + lit(2000000L)).as("vec_id"),
       transform(col("embedding").cast("array<double>"),
         x => x * 0.25d + 0.8d).cast("array<float>").as("embedding"))
-    val base = ivfAppendBaseOnce(s, dir, e, cents)
+    val base = ivfAppendBase(dir, e, cents)
     val root = cloneIndex(s, base, "x_ann_recall_maint")
     (0 to 1).foreach { i =>
       Similarity.ivfAppendIndex(
@@ -295,8 +221,7 @@ object LlmQueries {
     val queries = e.filter(col("vec_id") < 4)
       .unionByName(drift.filter(col("vec_id") < 2000032L))
     val union = e.unionByName(drift)
-    val exact = exactTopkOnce(s, dir, union, queries, k = 10,
-      key = "maint")
+    val exact = exactTopk(s, dir, "maint", union, queries, k = 10)
     val approx = Similarity.ivfSearchIndex(s, root, queries, k = 10,
       maintained, nProbe = 8, "vec_id", "embedding")
     Similarity.recallAtK(exact, approx)
@@ -312,148 +237,27 @@ object LlmQueries {
     * bench_incsplit_* temp tables, so neither engine times the
     * aggregate.
     */
-  private val splitBoundBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, Long]()
-  private def splitBoundOnce(dir: String, key: String,
-      d: => DataFrame): Long =
-    splitBoundBuilt.computeIfAbsent(s"$dir#$key",
-      _ => d.agg(max(col("doc_id"))).head().getLong(0) / 2)
-
-  /** Near-dup cluster tables (id, cluster_id) are persisted dedup-
-    * pipeline OUTPUT — index state that predates any pass consuming it
-    * (the split assignment, the representative selection), exactly like
-    * the resident signature index predates a delivery. The pipeline
-    * that builds them is itself measured (x_neardup_survivors,
-    * x_normalize_dedup); consumers stage the table once per (corpus,
-    * recipe) and the timed region is the consuming pass. Staged as
-    * PARQUET (the [[ivfIndexOnce]] lifecycle), never collected: in
-    * these gates the table is ∝ the working corpus, so a driver
-    * round-trip would not survive a scale-up. */
-  private val clusterTableBuilt = new java.util.concurrent.ConcurrentHashMap[
-    String, String]()
-
-  /** Schema of each staged parquet artifact, captured from the written
-    * DataFrame at staging time so every per-invocation read skips the
-    * parquet footer-inference Spark job (one scheduler round + driver
-    * gap per read; the schema is knowable statically — the writer is
-    * ten lines up — so inferring it back from footers is pure waste).
-    * Single-session assumption as in Similarity's indexSchemaMemo:
-    * staged artifacts are written only by the staging lifecycles in
-    * this file (each keyed computeIfAbsent guards its path), so no
-    * external writer can change a path's layout behind the memo.
-    * Bounded: cleared wholesale past [[StagedMemoMax]] paths (a miss
-    * re-infers once).
-    */
-  private val StagedMemoMax = 512
-  private val stagedSchemaByPath = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
-  private def readStaged(s: SparkSession, path: String): DataFrame =
-    Option(stagedSchemaByPath.get(path)) match {
-      case Some(sch) => s.read.schema(sch).parquet(path)
-      case None =>
-        val df = s.read.parquet(path)
-        if (stagedSchemaByPath.size() > StagedMemoMax)
-          stagedSchemaByPath.clear()
-        stagedSchemaByPath.putIfAbsent(path, df.schema)
-        df
+  private def splitBound(dir: String, key: String, d: => DataFrame): Long =
+    Staged.value(s"split-bound-$key", dir) {
+      d.agg(max(col("doc_id"))).head().getLong(0) / 2
     }
-  /** `build` returns the table plus a cleanup thunk (unpersist of any
-    * intermediate cache) that runs AFTER the staging write's action —
-    * a `try/finally` inside the block would fire at expression
-    * evaluation, before the write job, leaving the cache dead for the
-    * one job that needs it. */
-  private def clusterTableOnce(s: SparkSession, dir: String, key: String)(
-      build: => (DataFrame, () => Unit)): DataFrame = {
-    val path = clusterTableBuilt.computeIfAbsent(s"$dir#$key", _ => {
-      val p = stagePath(s"clusters-$key", dir)
-      val (df, cleanup) = build
-      stagedSchemaByPath.putIfAbsent(p, df.schema)
-      try df.write.mode("overwrite").parquet(p) finally cleanup()
-      p
-    })
-    readStaged(s, path)
-  }
-
-  /** Binary media corpora (payloads + their planted near-dup twins) are
-    * stored INPUT DATA — what a production fingerprint pass reads from
-    * the lake — synthesized here deterministically from the text corpus
-    * because the container ships no real media (the x_ann_recall
-    * staged-fixture precedent: a deterministic function of the static
-    * corpus, staged once per (corpus, kind) as parquet). The timed
-    * region is exactly what the engine would run against stored bytes:
-    * decode → fingerprint → banded blocking → exact verify. Symmetry:
-    * the DuckDB twin reads ITS stored representation of the same corpus
-    * (the text table) in every timed pass and derives fingerprints from
-    * it — both engines now start a pass at "fingerprint your stored
-    * input"; only the fixture SYNTHESIS (creating the binary corpus,
-    * work the oracle never mirrors because it has no payload form)
-    * moved out of the loop. */
-  private val mediaCorpusBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def mediaCorpusOnce(s: SparkSession, dir: String, kind: String)(
-      build: => DataFrame): DataFrame = {
-    val path = mediaCorpusBuilt.computeIfAbsent(s"$dir#$kind", _ => {
-      val p = stagePath(s"media-$kind", dir)
-      val df = build
-      stagedSchemaByPath.putIfAbsent(p, df.schema)
-      df.write.mode("overwrite").parquet(p)
-      p
-    })
-    readStaged(s, path)
-  }
 
   /** The trained add-k bigram LM table is a persisted model artifact
-    * (what a KenLM binary is) — the [[ivfIndexOnce]] lifecycle: built
-    * once per corpus to a deterministic path, scored against any number
-    * of times. */
-  private val bigramModelBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def bigramModelOnce(s: SparkSession, dir: String): String =
-    bigramModelBuilt.computeIfAbsent(dir, _ => {
-      val path = stagePath("bigram-lm", dir)
-      val df = graft.llm.LanguageModel.bigramModel(
-        docs(s, dir).select(col("doc_id"), col("text")))
-      stagedSchemaByPath.putIfAbsent(path, df.schema)
-      df.write.mode("overwrite").parquet(path)
-      path
+    * (what a KenLM binary is): built once per corpus, scored against
+    * any number of times. */
+  private def bigramModel(s: SparkSession, dir: String): DataFrame =
+    Staged.read(s, Staged.path("bigram-lm", dir) { p =>
+      Staged.write(graft.llm.LanguageModel.bigramModel(
+        docs(s, dir).select(col("doc_id"), col("text"))), p)
     })
 
-  /** BM25 corpus statistics (N, avgdl, per-term idf) are offline-
-    * trainable model state, ≤|terms|+1 values — the [[dsirTableOnce]]
-    * lifecycle: trained once per (corpus, term set), every scoring
-    * pass then runs zero training actions. */
-  private val bm25StatsBuilt = new java.util.concurrent.ConcurrentHashMap[
-    String, graft.llm.Ranking.Bm25Stats]()
-  private def bm25StatsOnce(s: SparkSession, dir: String,
-      terms: Seq[String]): graft.llm.Ranking.Bm25Stats =
-    bm25StatsBuilt.computeIfAbsent(s"$dir#${terms.mkString(",")}", _ =>
-      graft.llm.Ranking.bm25Train(docs(s, dir), terms))
-
-  /** IVF-PQ index sibling of [[ivfIndexOnce]]: codes stored next to the
-    * vectors under the cell partitions, built once per corpus. */
-  private val ivfPqIndexBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def ivfPqIndexOnce(s: SparkSession, dir: String, corpus: DataFrame,
-      cents: Seq[Seq[Double]], cbs: Seq[Seq[Seq[Double]]]): String =
-    ivfPqIndexBuilt.computeIfAbsent(dir, _ => {
-      val idx = stagePath("ivfpq-index", dir)
-      Similarity.ivfPqWriteIndex(corpus, graft.llm.IvfQuantizer(cents),
-        cbs, idx)
-      idx
-    })
-
-  /** Staged stream-source files for the streaming-dedup gates — one
+  /** Staged stream-source files for the streaming gates — one
     * single-file parquet delivery per entry, with ordered mtimes, built
-    * once per corpus (they are pure functions of it) and reused
-    * read-only. */
-  private val stStageBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def stStageOnce(s: SparkSession, dir: String,
-      deliveries: Seq[DataFrame], key: String = "st"): String =
-    stStageBuilt.computeIfAbsent(s"$dir#$key", _ => {
-      val base = stagePath(s"$key-stage", dir)
-      val p = new org.apache.hadoop.fs.Path(base)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    * once per (corpus, key) (they are pure functions of it) and reused
+    * read-only. Returns the directory the stream reads. */
+  private def streamSource(s: SparkSession, dir: String, key: String,
+      deliveries: Seq[DataFrame]): String =
+    Staged.path(s"$key-stage", dir) { base =>
       def dropFile(df: DataFrame, name: String, mtime: Long): Unit = {
         df.coalesce(1).write.mode("overwrite").parquet(s"$base/_stage_$name")
         val part = new java.io.File(s"$base/_stage_$name").listFiles()
@@ -468,63 +272,16 @@ object LlmQueries {
       deliveries.zipWithIndex.foreach { case (df, i) =>
         dropFile(df, f"delivery-${i + 1}%03d", t0 + i * 60000L)
       }
-      s"$base/stream"
-    })
+    } + "/stream"
 
-  /** Drifted-lake input fixtures for the schema-drift gates: the
-    * mutually-incompatible delivery generations a conformed read must
-    * absorb are stored input data, deterministic functions of the
-    * corpus — built once per (corpus, gate) and read-only thereafter
-    * (the [[mediaCorpusOnce]] lifecycle). */
-  private val driftLakeBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def driftLakeOnce(s: SparkSession, dir: String, key: String)(
-      build: String => Unit): String =
-    driftLakeBuilt.computeIfAbsent(s"$dir#$key", _ => {
-      val root = stagePath(s"drift-$key", dir)
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      build(root)
-      root
-    })
-
-  /** Pristine resident index for the append gate — built once per
+  /** Pristine resident index for the append gates — built once per
     * corpus and never mutated (each gate invocation clones it and
     * appends into the clone). */
-  private val ivfAppendBaseBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def ivfAppendBaseOnce(s: SparkSession, dir: String,
-      corpus: DataFrame, cents: Seq[Seq[Double]]): String =
-    ivfAppendBaseBuilt.computeIfAbsent(dir, _ => {
-      val idx = stagePath("ivf-append-base", dir)
-      val p = new org.apache.hadoop.fs.Path(idx)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+  private def ivfAppendBase(dir: String, corpus: DataFrame,
+      cents: Seq[Seq[Double]]): String =
+    Staged.path("ivf-append-base", dir) { idx =>
       Similarity.ivfWriteIndex(corpus, cents, idx)
-      idx
-    })
-
-  /** Pristine resident SIGNATURE index for the incremental-dedup gates
-    * — the accumulated-survivor state a delivery dedups against. Like
-    * [[ivfAppendBaseOnce]], the resident index is offline state (at
-    * 100 TB it is the accumulation of every prior delivery — nobody
-    * rebuilds it per delivery), so it is built once per (corpus, key)
-    * and each gate invocation CLONES it and admits into the clone: the
-    * timed path is one delivery admission against a resident index,
-    * the per-delivery cost that actually matters at scale. `build`
-    * runs the first admission (and any index maintenance, e.g.
-    * compaction) under a deterministic root.
-    */
-  private val incDedupBaseBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def incDedupBaseOnce(s: SparkSession, dir: String, key: String)(
-      build: String => Unit): String =
-    incDedupBaseBuilt.computeIfAbsent(s"$dir#$key", _ => {
-      val idx = stagePath(s"$key-base", dir)
-      val p = new org.apache.hadoop.fs.Path(idx)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      build(idx)
-      idx
-    })
+    }
 
   /** Clone a staged index root into a fresh per-invocation root.
     * Hard-link tree walk, not a byte copy: committed index files are
@@ -536,8 +293,8 @@ object LlmQueries {
     * a real copy if the filesystem refuses links.
     */
   private def cloneIndex(s: SparkSession, base: String, name: String): String = {
-    val root = freshIndexRoot(s, name)
-    import java.nio.file.{Files, Path, Paths}
+    val root = Staged.scratch(name)
+    import java.nio.file.{Files, Paths}
     val src = Paths.get(base); val dst = Paths.get(root)
     try {
       val walk = Files.walk(src) // close: walk/list streams hold an fd each
@@ -557,16 +314,8 @@ object LlmQueries {
       } finally walk.close()
     } catch {
       case _: UnsupportedOperationException | _: java.io.IOException =>
-        // partial link tree from the failed attempt, then plain copy
-        def rm(x: Path): Unit = {
-          if (Files.isDirectory(x)) {
-            val ls = Files.list(x)
-            try ls.iterator().forEachRemaining(rm)
-            finally ls.close()
-          }
-          Files.deleteIfExists(x)
-        }
-        rm(Paths.get(root))
+        // wipe the partial link tree, then plain copy
+        Staged.scratch(name)
         val conf = s.sparkContext.hadoopConfiguration
         val fs = new org.apache.hadoop.fs.Path(base).getFileSystem(conf)
         org.apache.hadoop.fs.FileUtil.copy(fs,
@@ -599,22 +348,21 @@ object LlmQueries {
         sum(col("n_tokens")).as("n_tokens"))
   }
 
-  /** Quality classifier trained ONCE per corpus and reused — the same
-    * offline lifecycle as [[trainedQuantizer]]. Weak labels: natural
+  /** Quality classifier trained ONCE per corpus and reused — the
+    * offline lifecycle of a trained quantizer. Weak labels: natural
     * docs take their Gopher verdict; 40 planted junk + 40 planted clean
     * rows (deterministic, id-salted so no two are byte-identical)
     * balance the label mass so a skewed corpus can't degenerate the fit.
     * Deterministic: fixed input → fixed partitioning → LBFGS reproduces
     * bit-identically; no sampling anywhere.
     */
-  private val qualityModelBuilt = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.ml.classification.LogisticRegressionModel]()
-  private def qualityModelOnce(s: SparkSession, dir: String)
+  private def qualityModel(s: SparkSession, dir: String)
       : org.apache.spark.ml.classification.LogisticRegressionModel =
-    qualityModelBuilt.computeIfAbsent(dir, _ =>
-      graft.llm.QualityModel.train(qualityTrainingSet(s, dir)))
+    Staged.value("quality-model", dir) {
+      graft.llm.QualityModel.train(qualityTrainingSet(s, dir))
+    }
 
-  /** The labeled feature table [[qualityModelOnce]] fits on — exposed so
+  /** The labeled feature table [[qualityModel]] fits on — exposed so
     * `graft.ScaleCurve` can time training UN-memoized at 1× and N×
     * corpus scale (the gate path would hide the second fit).
     */
@@ -666,14 +414,14 @@ object LlmQueries {
     // model, per-doc mean bigram log-probability (the KenLM-style
     // perplexity proxy one order up from x_unigram_logprob)
     // scored against the staged-once TRAINED model table
-    // (bigramModelOnce — the persisted-KenLM-artifact lifecycle); the
+    // (bigramModel — the persisted-KenLM-artifact lifecycle); the
     // timed region is the production scoring pass: explode → one model
     // join → one per-doc mean. bigramLogProbWith == bigramLogProb
     // pinned by LlmOpsSpec.
     "x_bigram_logprob" -> ((s, dir) =>
       graft.llm.LanguageModel.bigramLogProbWith(
         docs(s, dir).select(col("doc_id"), col("text")),
-        readStaged(s, bigramModelOnce(s, dir)))),
+        bigramModel(s, dir))),
 
     // Gopher quality rules (word-count/word-length bounds, symbol
     // ratio, alphabetic-word fraction, stop-word presence) with two
@@ -700,12 +448,12 @@ object LlmQueries {
     // codegen'd signal family, weak-labeled by the Gopher verdict —
     // the fastText-style "quality classifier" stage of GPT-3/LLaMA
     // curation). The model is fitted once per corpus (memoized, the
-    // trainedQuantizer lifecycle); the gate scores a held-out planted
+    // trained-quantizer lifecycle); the gate scores a held-out planted
     // eval set of blatant junk and blatant prose and pins PERFECT
     // separation — the same measured-contract shape as x_ann_recall's
     // recall floors. DuckDB cannot replay LBFGS; it pins the contract.
     "x_quality_classifier" -> ((s, dir) => {
-      val model = qualityModelOnce(s, dir)
+      val model = qualityModel(s, dir)
       val eval = s.range(4).select((col("id") + 1200000000L).as("doc_id"),
         concat(lit(("%% ## !! ## " * 9).trim + " "), col("id").cast("string"))
           .as("text"), lit(0L).as("expected_label"))
@@ -722,7 +470,7 @@ object LlmQueries {
     }),
 
     // the classifier's MEASURED contract on natural documents the fit
-    // never saw: qualityModelOnce trains on the >= 200000 id-hash fold
+    // never saw: qualityModel trains on the >= 200000 id-hash fold
     // only; this gate scores the held-out < 200000 fold against its
     // Gopher weak labels (all 0 on this corpus — no natural doc clears
     // the >= 2-stop-word rule) and pins an accuracy floor plus a
@@ -735,7 +483,7 @@ object LlmQueries {
     // LBFGS; it pins n_eval by replaying the fold hash, and the
     // contract bits as literals.
     "x_quality_holdout" -> ((s, dir) => {
-      val model = qualityModelOnce(s, dir)
+      val model = qualityModel(s, dir)
       val eval = docs(s, dir)
         .filter(graft.llm.Sampling.hashBucket(col("doc_id"), "qsplit") < 200000)
         .select(col("doc_id"), col("text"))
@@ -1120,9 +868,9 @@ object LlmQueries {
     "x_ann_recall" -> ((s, dir) => {
       val e = embs(s, dir)
       val q = e.filter(col("vec_id") < 8)
-      // reference answers staged once per corpus (exactTopkOnce); the
+      // reference answers staged once per corpus (exactTopk); the
       // timed region is the two approximate searches + recall joins
-      val exact = exactTopkOnce(s, dir, e, q, k = 10)
+      val exact = exactTopk(s, dir, "", e, q, k = 10)
       def contract(method: String, approx: DataFrame, floor: Double) =
         Similarity.recallAtK(exact, approx)
           .select(lit(method).as("method"), col("n_exact"),
@@ -1165,13 +913,15 @@ object LlmQueries {
     // to <= the probed cell count before any row is read. Same planted-
     // twin oracle as x_cosine_ann_ivf: the layout must not change
     // results, only the bytes a search touches. The index itself is
-    // built ONCE per corpus and reused (ivfIndexOnce) — the production
+    // built ONCE per corpus and reused (Staged.path) — the production
     // lifecycle, like quantizer training: build is the amortized
     // offline step, the gate measures the search path.
     "x_cosine_ann_ivf_pruned" -> ((s, dir) => {
       val cents = pseudorandomCentroids(n = 16, dim = 64)
       annTwinGate(s, dir, (c, q) => {
-        val idx = ivfIndexOnce(s, dir, c, cents)
+        val idx = Staged.path("ivf-index", dir) { p =>
+          Similarity.ivfWriteIndex(c, cents, p)
+        }
         Similarity.ivfSearchIndex(s, idx, q, k = 5, cents, nProbe = 4)
       }, k = 5)
     }),
@@ -1185,16 +935,17 @@ object LlmQueries {
     // pruning self-assert still runs against the appended layout. This
     // measures the incremental-ANN lifecycle end-to-end (the 100 TB
     // shape: nobody re-indexes the accumulated corpus per crawl
-    // delivery), so unlike ivfIndexOnce the build+append is INSIDE the
-    // gate, deliberately unmemoized.
+    // delivery), so unlike x_cosine_ann_ivf_pruned's staged index the
+    // append is INSIDE the gate, deliberately unmemoized.
     "x_cosine_ann_ivf_append" -> ((s, dir) => {
       val cents = pseudorandomCentroids(n = 16, dim = 64)
       annTwinGate(s, dir, (c, q) => {
         // the RESIDENT index is offline state (built once per corpus,
-        // like ivfIndexOnce); what this gate measures is the APPEND +
+        // like x_cosine_ann_ivf_pruned's); what this gate measures is the
+        // APPEND +
         // SEARCH path, so each invocation clones the pristine base
         // (cheap local copy of 16 cell dirs) and appends into the clone
-        val base = ivfAppendBaseOnce(s, dir,
+        val base = ivfAppendBase(dir,
           c.filter(col("vec_id") < 1000000L), cents)
         val root = cloneIndex(s, base, "x_ivf_append")
         Similarity.ivfAppendIndex(c.filter(col("vec_id") >= 1000000L), cents, root)
@@ -1245,7 +996,9 @@ object LlmQueries {
       // independent (identical vectors share a cell under ANY quantizer),
       // so the trained quantizer changes nothing the oracle checks.
       Similarity.semanticDupPairs(corpus,
-        trainedQuantizer(s, dir, nCells = 16), minCos = 0.999)
+        Staged.value("quantizer-16", dir) {
+          Similarity.trainCentroids(embs(s, dir), 16, lloydIters = 2)
+        }, minCos = 0.999)
         .filter(col("cos_sim") === 1.0)
         .join(vecs.select(col("vec_id").as("id_a"), col("v").as("va")), Seq("id_a"))
         .join(vecs.select(col("vec_id").as("id_b"), col("v").as("vb")), Seq("id_b"))
@@ -1683,7 +1436,7 @@ object LlmQueries {
     // equivalent-work sequential two-delivery plan (see the oracle).
     "x_incremental_dedup" -> ((s, dir) => {
       val d = docs(s, dir).select(col("doc_id"), col("text"))
-      val split = splitBoundOnce(dir, "full", d)
+      val split = splitBound(dir, "full", d)
       val low = d.filter(col("doc_id") <= split)
       val high = d.filter(col("doc_id") > split)
       val delivery2 = high
@@ -1692,14 +1445,14 @@ object LlmQueries {
         .union(high.select(
           twinId(col("doc_id"), 2000000000L).as("doc_id"), col("text")))
       // the RESIDENT index is offline state (the accumulation of every
-      // prior delivery — the ivfAppendBaseOnce lifecycle): built once
+      // prior delivery — the ivfAppendBase lifecycle): built once
       // per corpus as TWO sequential low-half admissions whose
       // generations are then FOLDED by delta-log compaction, so every
       // invocation admits against a compacted multi-generation history
       // — compaction sits on the measured path's read side. The timed
       // region is one delivery-2 admission against the cloned resident
       // index: the per-delivery cost, which is what scales.
-      val base = incDedupBaseOnce(s, dir, "x-inc-dedup") { idx =>
+      val base = Staged.path("x-inc-dedup-base", dir) { idx =>
         IncrementalDedup.addDelivery(
           low.filter(col("doc_id") <= split / 2), idx, minJaccard = 1.0)
         IncrementalDedup.addDelivery(
@@ -1724,7 +1477,7 @@ object LlmQueries {
     // into a RED row.
     "x_incremental_dedup_dist" -> ((s, dir) => {
       val d = docs(s, dir).select(col("doc_id"), col("text"))
-      val split = splitBoundOnce(dir, "full", d)
+      val split = splitBound(dir, "full", d)
       val low = d.filter(col("doc_id") <= split)
       val high = d.filter(col("doc_id") > split)
       val delivery2 = high
@@ -1732,7 +1485,7 @@ object LlmQueries {
           twinId(col("doc_id"), 1000000000L).as("doc_id"), col("text")))
         .union(high.select(
           twinId(col("doc_id"), 2000000000L).as("doc_id"), col("text")))
-      val base = incDedupBaseOnce(s, dir, "x-inc-dedup") { idx =>
+      val base = Staged.path("x-inc-dedup-base", dir) { idx =>
         IncrementalDedup.addDelivery(
           low.filter(col("doc_id") <= split / 2), idx, minJaccard = 1.0)
         IncrementalDedup.addDelivery(
@@ -1761,7 +1514,7 @@ object LlmQueries {
       import s.implicits._
       val d = docs(s, dir).select(col("doc_id"), col("text"))
         .filter(col("doc_id") % 4 === 1)
-      val split = splitBoundOnce(dir, "q1", d)
+      val split = splitBound(dir, "q1", d)
       val low = d.filter(col("doc_id") <= split)
       val high = d.filter(col("doc_id") > split)
       val delivery2 = high
@@ -1791,7 +1544,7 @@ object LlmQueries {
       // (band, bkt) partition pruning + pushed bh IN filter instead of
       // a full index scan, the ∝-delivery cost a per-trigger dedup
       // needs against a 100 TB accumulated index.
-      val base = incDedupBaseOnce(s, dir, "x-inc-dedup-pruned") { idx =>
+      val base = Staged.path("x-inc-dedup-pruned-base", dir) { idx =>
         IncrementalDedup.addDelivery(low.union(delivery2), idx,
           minJaccard = 1.0, layout = graft.llm.BandedIndex())
         ()
@@ -1823,13 +1576,13 @@ object LlmQueries {
       // the STREAMING composition — a micro-batch trigger admitting
       // into one persisted index — which x_incremental_dedup exercises
       // in batch form. The whole slice is the RESIDENT index (offline
-      // state, the incDedupBaseOnce lifecycle); the stream delivers
+      // state, the x_incremental_dedup lifecycle); the stream delivers
       // the twin wave as one file trigger into a clone of it.
       val d = docs(s, dir).select(col("doc_id"), col("text"))
         .filter(col("doc_id") % 4 === 0)
       val twins = d.select(
         twinId(col("doc_id"), 1000000000L).as("doc_id"), col("text"))
-      val base = incDedupBaseOnce(s, dir, "st-inc-dedup") { idx =>
+      val base = Staged.path("st-inc-dedup-base", dir) { idx =>
         IncrementalDedup.addDelivery(d, s"$idx/index", minJaccard = 1.0)
         ()
       }
@@ -1837,7 +1590,7 @@ object LlmQueries {
       // stream-source files are a deterministic function of the corpus
       // — staged ONCE per session and reused across invocations; index
       // + checkpoint roots stay fresh per invocation
-      val srcDir = stStageOnce(s, dir, Seq(twins), key = "st3")
+      val srcDir = streamSource(s, dir, "st3", Seq(twins))
       val stream = s.readStream.schema(twins.schema).parquet(srcDir)
       val q = graft.streaming.DocStream.incrementalDedupSink(
         stream, s"$root/index", s"$root/ckpt", minJaccard = 1.0)
@@ -1864,7 +1617,7 @@ object LlmQueries {
     "st_ivf_append" -> ((s, dir) => {
       val cents = pseudorandomCentroids(n = 16, dim = 64)
       annTwinGate(s, dir, (c, q) => {
-        val base = ivfAppendBaseOnce(s, dir,
+        val base = ivfAppendBase(dir,
           c.filter(col("vec_id") < 1000000L), cents)
         val root = cloneIndex(s, base, "st_ivf_append")
         val delta = c.filter(col("vec_id") >= 1000000L)
@@ -1872,9 +1625,9 @@ object LlmQueries {
         // — staged once per session; index clone + checkpoint stay
         // fresh per invocation (a reused checkpoint would mark the
         // batch committed and skip the admission being timed)
-        val srcDir = stStageOnce(s, dir, Seq(delta), key = "st-ivf")
+        val srcDir = streamSource(s, dir, "st-ivf", Seq(delta))
         val stream = s.readStream.schema(delta.schema).parquet(srcDir)
-        val ckpt = freshIndexRoot(s, "st_ivf_append_ckpt")
+        val ckpt = Staged.scratch("st_ivf_append_ckpt")
         val qy = graft.streaming.DocStream.ivfAppendSink(stream,
           graft.llm.IvfQuantizer(cents), root, ckpt)
         qy.processAllAvailable()
@@ -1900,11 +1653,11 @@ object LlmQueries {
       // the two mutually-incompatible delivery generations are STORED
       // INPUT DATA — what a production loader finds in the lake —
       // synthesized deterministically from the corpus and staged once
-      // per (corpus, gate), the mediaCorpusOnce precedent; the timed
+      // per (corpus, gate), the x_image_phash precedent; the timed
       // region is the operator under test, the conformed read. (The
       // oracle twin never paid the synthesis either: it recomputes the
       // conformed cells from `documents` directly.)
-      val root = driftLakeOnce(s, dir, "s_schema_drift") { r =>
+      val root = Staged.path("drift-s_schema_drift", dir) { r =>
         d.filter(col("doc_id") % 3 =!= 0)
           .select(col("doc_id").cast("int").as("doc_id"), col("text"),
             col("lang"))
@@ -1984,7 +1737,7 @@ object LlmQueries {
     "s_schema_drift_nested" -> ((s, dir) => {
       val d = docs(s, dir)
       // staged drifted-lake input, same rationale as s_schema_drift
-      val root = driftLakeOnce(s, dir, "s_schema_drift_nested") { r =>
+      val root = Staged.path("drift-s_schema_drift_nested", dir) { r =>
         d.filter(col("doc_id") % 3 =!= 0)
           .select(col("doc_id"),
             struct(col("lang"), col("n_chars"),
@@ -2105,13 +1858,13 @@ object LlmQueries {
     // log-ratio table, the per-doc sum — engine-portable, so the
     // oracle recomputes every weight rather than spot-checking. The
     // ratio table is corpus-level state TRAINED once per corpus and
-    // reused (dsirTableOnce — the trainedQuantizer lifecycle); the
+    // reused (dsirTable — the trained-quantizer lifecycle); the
     // gate measures the per-doc scoring path, the part that scales
     // with corpus bytes.
     "x_dsir_weights" -> ((s, dir) => {
       val raw = docs(s, dir)
       graft.llm.Selection.dsirLogWeightsWithTable(raw,
-        dsirTableOnce(s, dir, "full", raw,
+        dsirTable(s, dir, "full", raw,
           raw.filter(col("lang") === "en")), buckets = 4096)
         .select(col("doc_id"), roundDet(col("log_weight"), 4).as("log_w"))
     }),
@@ -2127,7 +1880,7 @@ object LlmQueries {
       // trained state (different raw distribution than the full one)
       val raw = docs(s, dir).filter(col("doc_id") % 2 === 0)
       val weighted = graft.llm.Selection.dsirLogWeightsWithTable(raw,
-        dsirTableOnce(s, dir, "half", raw,
+        dsirTable(s, dir, "half", raw,
           raw.filter(col("lang") === "en")), buckets = 4096)
       val k = (raw.count() / 5L).toInt
       graft.llm.Selection.dsirSelectTopK(weighted, k)
@@ -2179,7 +1932,9 @@ object LlmQueries {
       val cbs = Similarity.pseudorandomPqCodebooks(
         numSub = 8, codesPerSub = 16, subDim = 8)
       annTwinGate(s, dir, (c, q) => {
-        val idx = ivfPqIndexOnce(s, dir, c, cents, cbs)
+        val idx = Staged.path("ivfpq-index", dir) { p =>
+          Similarity.ivfPqWriteIndex(c, graft.llm.IvfQuantizer(cents), cbs, p)
+        }
         Similarity.ivfPqSearchIndex(s, idx, q, k = 5,
           graft.llm.IvfQuantizer(cents), cbs, nProbe = 2, rerank = 16)
       }, k = 5)
@@ -2256,18 +2011,26 @@ object LlmQueries {
       def corpus = quarter.union(quarter.select(
         twinId(col("doc_id"), 1000000000L).as("doc_id"), col("text")))
       // the near-dup cluster table is staged dedup-pipeline output
-      // (clusterTableOnce; the pipeline itself is measured by
-      // x_neardup_survivors); the timed pass is the split assignment
-      val clusters = clusterTableOnce(s, dir, "minhashJ1") {
-        val state = corpus.select(col("doc_id").as("id"),
-            Dedup.shingles(TextAnalysis.tokens(col("text")), 3).as("arr"))
-          .withColumn("sig", Dedup.minhashSignature(col("arr"), 32))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val cands = Dedup.minhashCandidatesFromSigs(state.select("id", "sig"))
-        val pairs = Dedup.verifyJaccardFromShingles(cands, state)
-          .filter(col("jaccard") >= 1.0).select("id_a", "id_b")
-        (Dedup.duplicateClusters(pairs), () => { state.unpersist(); () })
-      }
+      // (the pipeline itself is measured by x_neardup_survivors); the
+      // timed pass is the split assignment. Cluster tables (id,
+      // cluster_id) are index state that predates any pass consuming
+      // them, exactly like the resident signature index predates a
+      // delivery; staged as PARQUET, never collected: the table is ∝ the
+      // working corpus, so a driver round-trip would not survive a
+      // scale-up.
+      val clusters = Staged.read(s,
+        Staged.path("clusters-minhashJ1", dir) { p =>
+          val state = corpus.select(col("doc_id").as("id"),
+              Dedup.shingles(TextAnalysis.tokens(col("text")), 3).as("arr"))
+            .withColumn("sig", Dedup.minhashSignature(col("arr"), 32))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          val cands =
+            Dedup.minhashCandidatesFromSigs(state.select("id", "sig"))
+          val pairs = Dedup.verifyJaccardFromShingles(cands, state)
+            .filter(col("jaccard") >= 1.0).select("id_a", "id_b")
+          try Staged.write(Dedup.duplicateClusters(pairs), p)
+          finally { state.unpersist(); () }
+        })
       Sampling.clusterSafeSplit(
           corpus.select("doc_id"), clusters, "doc_id",
           Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
@@ -2298,13 +2061,15 @@ object LlmQueries {
         length(col("text")).cast("long").as("len"),
         md5(TextAnalysis.normalizeText(col("text"))).as("nh"))
       // the cluster table is staged dedup-pipeline output
-      // (clusterTableOnce); the timed pass is the selection itself
-      val clusters = clusterTableOnce(s, dir, "normEq") {
-        val mins = withNorm.groupBy("nh")
-          .agg(min(col("doc_id")).as("cluster_id"))
-        (withNorm.join(mins, Seq("nh"))
-          .select(col("doc_id").as("id"), col("cluster_id")), () => ())
-      }
+      // (x_cluster_safe_split's lifecycle); the timed pass is the
+      // selection itself
+      val clusters = Staged.read(s,
+        Staged.path("clusters-normEq", dir) { p =>
+          val mins = withNorm.groupBy("nh")
+            .agg(min(col("doc_id")).as("cluster_id"))
+          Staged.write(withNorm.join(mins, Seq("nh"))
+            .select(col("doc_id").as("id"), col("cluster_id")), p)
+        })
       Dedup.clusterRepresentatives(
         withNorm.select("doc_id", "len"), clusters, "doc_id", "len")
     }),
@@ -2314,17 +2079,19 @@ object LlmQueries {
     // on the driver; per-(doc,term) scores are summed as integer
     // micro-units, so the ranking and every score hash-match the
     // oracle's replay of the same Okapi formula. Corpus stats are the
-    // staged-once trained state (bm25StatsOnce); the timed region is
+    // staged-once trained state (Staged.value); the timed region is
     // the production scoring pass.
     "x_bm25_search" -> ((s, dir) => {
       val terms = Seq("vector", "stream", "window")
       graft.llm.Ranking.bm25TopK(docs(s, dir), terms, k = 20,
-        stats = Some(bm25StatsOnce(s, dir, terms)))
+        stats = Some(Staged.value(s"bm25-${terms.mkString(",")}", dir) {
+          graft.llm.Ranking.bm25Train(docs(s, dir), terms)
+        }))
     }),
 
     // CCNet-style perplexity bucketing (Wenzek et al. 2020 §4.3): score
     // every document against the persisted bigram LM (the
-    // x_bigram_logprob artifact — bigramModelOnce, the KenLM
+    // x_bigram_logprob artifact — bigramModel, the KenLM
     // lifecycle), then cut the corpus into head/middle/tail buckets by
     // the score's corpus quartiles (Selection.quantileBuckets, exact
     // mode). Thresholds are the one corpus-level aggregate (2 values);
@@ -2341,7 +2108,7 @@ object LlmQueries {
     // equivalent interpolation formula in any engine yields the
     // bit-identical threshold and the >= cuts cannot flake.
     "x_ppl_buckets" -> ((s, dir) => {
-      val model = readStaged(s, bigramModelOnce(s, dir))
+      val model = bigramModel(s, dir)
       val scored = graft.llm.LanguageModel.bigramLogProbWith(
           docs(s, dir).select(col("doc_id"), col("text")), model)
         .select(col("doc_id"),
@@ -2373,7 +2140,7 @@ object LlmQueries {
     // the exact side and pins the bit true, so sketch drift out of
     // tolerance is a RED row.
     "x_ppl_buckets_approx" -> ((s, dir) => {
-      val model = readStaged(s, bigramModelOnce(s, dir))
+      val model = bigramModel(s, dir)
       val scored = graft.llm.LanguageModel.bigramLogProbWith(
           docs(s, dir).select(col("doc_id"), col("text")), model)
         .select(col("doc_id"),
@@ -2431,10 +2198,18 @@ object LlmQueries {
       // banding recall + gradient verify) is volume-independent — the
       // x_cluster_safe_split slicing precedent; each base image still
       // rides THREE decoder passes (base, shifted PPM, BMP). The binary
-      // corpus (payloads + twins) is stored input data, staged once
-      // (mediaCorpusOnce — see its symmetry note); the timed region is
-      // the production pass: decode → dHash → banding → verify.
-      val corpus = mediaCorpusOnce(s, dir, "phash") {
+      // corpus (payloads + twins) is stored input data — what a
+      // production fingerprint pass reads from the lake — synthesized
+      // deterministically from the text corpus because the container
+      // ships no real media, and staged once per corpus as parquet; the
+      // timed region is the production pass: decode → dHash → banding →
+      // verify. Symmetry: the DuckDB twin reads ITS stored representation
+      // of the same corpus (the text table) in every timed pass and
+      // derives fingerprints from it — both engines start a pass at
+      // "fingerprint your stored input"; only the fixture SYNTHESIS,
+      // which the oracle never mirrors (it has no payload form), moved
+      // out of the loop.
+      val corpus = Staged.read(s, Staged.path("media-phash", dir) { p =>
         val d = docs(s, dir).select(col("doc_id"), col("text"))
           .filter(col("doc_id") % 4 === 1)
         val media = graft.llm.Multimodal.withPpmPayload(d)
@@ -2447,8 +2222,8 @@ object LlmQueries {
           .mapPayload(media, graft.llm.Multimodal.reencodeBmp)
           .select(twinId(col("doc_id"), 2000000000L).as("doc_id"),
             col("payload"))
-        media.union(bright).union(bmp)
-      }
+        Staged.write(media.union(bright).union(bmp), p)
+      })
       val sigs = graft.llm.Multimodal
         .imagePHash(corpus)
         .filter(col("valid"))
@@ -2486,10 +2261,9 @@ object LlmQueries {
       // banding recall + gcd-normalized verify) is volume-independent —
       // the x_image_phash slicing precedent; each base clip still rides
       // TWO codec passes (base, gain-shifted). Binary corpus staged
-      // once as stored input data (mediaCorpusOnce — symmetry note
-      // there); the timed region is decode → envelope hash → banding →
-      // verify.
-      val corpus = mediaCorpusOnce(s, dir, "audio") {
+      // once as stored input data (symmetry note at x_image_phash);
+      // the timed region is decode → envelope hash → banding → verify.
+      val corpus = Staged.read(s, Staged.path("media-audio", dir) { p =>
         val d = docs(s, dir).select(col("doc_id"), col("text"))
           .filter(col("doc_id") % 4 === 2)
         val media = graft.llm.Multimodal.withWavPayload(d)
@@ -2498,8 +2272,8 @@ object LlmQueries {
           .mapPayload(media, graft.llm.Multimodal.gainShiftWav(2))
           .select(twinId(col("doc_id"), 1000000000L).as("doc_id"),
             col("payload"))
-        media.union(gained)
-      }
+        Staged.write(media.union(gained), p)
+      })
       val sigs = graft.llm.Multimodal
         .audioFingerprint(corpus)
         .filter(col("valid"))
@@ -2542,18 +2316,22 @@ object LlmQueries {
       val d = docs(s, dir).select(col("doc_id"), col("source"), col("text"))
         .filter(col("doc_id") % 2 === 0)
       // the near-dup cluster table is staged dedup-pipeline output
-      // (clusterTableOnce — the pipeline itself is measured by
-      // x_neardup_survivors); the timed pass starts at the selection
-      val clusters = clusterTableOnce(s, dir, "minhashHalfJ1") {
-        val state = d.select(col("doc_id").as("id"),
-            Dedup.shingles(TextAnalysis.tokens(col("text")), 3).as("arr"))
-          .withColumn("sig", Dedup.minhashSignature(col("arr"), 32))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val cands = Dedup.minhashCandidatesFromSigs(state.select("id", "sig"))
-        val pairs = Dedup.verifyJaccardFromShingles(cands, state)
-          .filter(col("jaccard") >= 1.0).select("id_a", "id_b")
-        (Dedup.duplicateClusters(pairs), () => { state.unpersist(); () })
-      }
+      // (x_cluster_safe_split's lifecycle — the pipeline itself is
+      // measured by x_neardup_survivors); the timed pass starts at the
+      // selection
+      val clusters = Staged.read(s,
+        Staged.path("clusters-minhashHalfJ1", dir) { p =>
+          val state = d.select(col("doc_id").as("id"),
+              Dedup.shingles(TextAnalysis.tokens(col("text")), 3).as("arr"))
+            .withColumn("sig", Dedup.minhashSignature(col("arr"), 32))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          val cands =
+            Dedup.minhashCandidatesFromSigs(state.select("id", "sig"))
+          val pairs = Dedup.verifyJaccardFromShingles(cands, state)
+            .filter(col("jaccard") >= 1.0).select("id_a", "id_b")
+          try Staged.write(Dedup.duplicateClusters(pairs), p)
+          finally { state.unpersist(); () }
+        })
       val reps = Dedup.clusterRepresentatives(
           d.select(col("doc_id"), length(col("text")).cast("long").as("len")),
           clusters, "doc_id", "len")

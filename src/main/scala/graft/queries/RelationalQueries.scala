@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.core.Staged
 import graft.functions._
 import graft.sources.Tables
 
@@ -30,15 +31,6 @@ object RelationalQueries {
   private def tpchViews(s: SparkSession, dir: String): Unit =
     Tables.registerAll(s, dir)
 
-  /** Z-order grid bounds are persisted layout state (2 longs per dim) —
-    * staged once per corpus, like the trained quantizers/idf tables. */
-  private val zorderBounds = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Long, Long)]]()
-  private def zorderBoundsOnce(dir: String,
-      ev: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
-    zorderBounds.computeIfAbsent(dir, _ =>
-      graft.operators.ZOrder.trainBounds(ev, Seq("user_id", "ts_us")))
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Zipf-skewed join at bench scale through the salting operator: a
     // synthetic key where value 0 holds ~30% of lineitem (the hot
@@ -60,10 +52,13 @@ object RelationalQueries {
     "x_zorder_key" -> ((s, dir) => {
       val ev = Tables.events(s, dir).select(col("user_id"),
         expr("ts_ns div 1000").as("ts_us"))
-      // the grid bounds are persisted layout state (a key is only
-      // comparable under the grid that minted it) — staged once per
-      // corpus; the timed region is the pure keying projection
-      val bounds = zorderBoundsOnce(dir, ev)
+      // the grid bounds are persisted layout state (2 longs per dim; a
+      // key is only comparable under the grid that minted it) — staged
+      // once per corpus, like the trained quantizers/idf tables; the
+      // timed region is the pure keying projection
+      val bounds = Staged.value("zorder-bounds", dir) {
+        graft.operators.ZOrder.trainBounds(ev, Seq("user_id", "ts_us"))
+      }
       graft.operators.ZOrder
         .withZKeyBounds(ev, Seq("user_id", "ts_us"), bounds, bits = 8)
         .groupBy(shiftright(col("zkey"), 10).as("zbucket"))
@@ -94,8 +89,7 @@ object RelationalQueries {
     // recomputes per-key which run wins.
     "p6_incremental_composite" -> ((s, dir) => {
       import graft.dbt._
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft-p6-composite").toString
+      val wh = Staged.scratch("p6_incremental_composite")
       // the synthetic lineitem does NOT key uniquely on (orderkey,
       // linenumber) (unlike TPC-H), so the delivery rows are an
       // aggregate keyed (orderkey mod 211, linenumber) — genuinely

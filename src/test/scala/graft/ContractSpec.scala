@@ -333,6 +333,24 @@ class ContractSpec extends SparkSpec {
     assert(registry.keySet.subsetOf(SparkEntry.queries.keySet))
   }
 
+  // The staging policy (build-once memos, the private temp root, pinned
+  // read schemas) lives in graft.core.Staged alone; a hand-rolled memo
+  // or temp root in a query module would be one more cache every writer
+  // must know to invalidate.
+  test("query modules stage through graft.core.Staged only") {
+    val dir = java.nio.file.Paths.get("src/main/scala/graft/queries")
+    val ls = java.nio.file.Files.list(dir)
+    val files = try scala.jdk.CollectionConverters
+      .IteratorHasAsScala(ls.iterator()).asScala.toList finally ls.close()
+    val offenders = files.filter(_.toString.endsWith(".scala")).flatMap { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      Seq("ConcurrentHashMap", "createTempDirectory")
+        .filter(src.contains).map(w => s"${f.getFileName}: $w")
+    }
+    assert(files.nonEmpty && offenders.isEmpty,
+      s"stage through graft.core.Staged instead: ${offenders.mkString(", ")}")
+  }
+
   // Rounds 13-17 all flagged round artifacts left untracked/modified at
   // snapshot time. tools/round_hygiene.sh is the primary guard (runnable
   // any time); this twin runs the same check under an opt-in env flag —

@@ -81,8 +81,11 @@ class DedupSpec extends SparkSpec {
     // and the distributed propagation loop (forced via driverMaxPairs=0)
     val pairs = Seq((0L, 1L), (1L, 2L), (5L, 6L)).toDF("id_a", "id_b")
     for (cap <- Seq(1000000L, 0L)) {
-      val clusters = Dedup.duplicateClusters(pairs, driverMaxPairs = cap)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val labels = Dedup.duplicateClusters(pairs, driverMaxPairs = cap)
+      // the caller owns the distributed labels' checkpoint
+      val clusters =
+        try labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        finally graft.core.CacheUtil.freeCheckpoint(labels)
       assert(clusters(0L) == 0L && clusters(1L) == 0L && clusters(2L) == 0L,
         s"cap=$cap")
       assert(clusters(5L) == 5L && clusters(6L) == 5L, s"cap=$cap")
@@ -104,9 +107,18 @@ class DedupSpec extends SparkSpec {
     val chain = (0L until 63L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     // driverMaxPairs = 0 forces the distributed loop — the path this
     // test exists to pin (the fast path has no round cap to blow)
-    val clusters = Dedup.duplicateClusters(chain, maxIterations = 20,
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val labels = Dedup.duplicateClusters(chain, maxIterations = 20,
         driverMaxPairs = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1))
+    // the loop frees its pair checkpoint and every superseded round's
+    // labels itself; only the returned labels' checkpoint stays, the
+    // caller's to free
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).size == 1,
+      s"rounds: ${Dedup.lastCcRounds}")
+    assert(Dedup.lastCcRounds > 1)
+    val clusters =
+      try labels.collect().map(r => r.getLong(0) -> r.getLong(1))
+      finally graft.core.CacheUtil.freeCheckpoint(labels)
     assert(clusters.length == 64)
     assert(clusters.forall(_._2 == 0L))
   }

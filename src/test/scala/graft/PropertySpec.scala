@@ -508,8 +508,9 @@ class PropertySpec extends SparkSpec {
       }
       val dist = Dedup.duplicateClustersLocal(pairsDf,
           driverMaxPairs = 0) match {
-        case Right(df) =>
-          df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        case Right(df) => // the caller owns the labels' checkpoint
+          try df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+          finally graft.core.CacheUtil.freeCheckpoint(df)
         case Left(_) => fail(s"case $i: expected the distributed path")
       }
       assert(local == truth,

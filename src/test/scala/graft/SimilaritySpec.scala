@@ -117,13 +117,13 @@ class SimilaritySpec extends SparkSpec {
       vecs.filter(col("vec_id") === 0), k = 1, q, nProbe = 2,
       idCol = "vec_id", vecCol = "embedding").collect()
     assert(hit.nonEmpty)
-    val memoA = Similarity.memoizedIndexSchema(idx)
+    val memoA = graft.core.Staged.pinnedSchema(idx)
     assert(memoA.isDefined, "first read must populate the memo")
     // RELAYOUT at the same path: the PQ writer adds code columns
     val cbs = Similarity.trainPqCodebooks(vecs, numSub = 2,
       codesPerSub = 4, lloydIters = 1)
     Similarity.ivfPqWriteIndex(vecs, q, cbs, idx)
-    assert(Similarity.memoizedIndexSchema(idx).isEmpty,
+    assert(graft.core.Staged.pinnedSchema(idx).isEmpty,
       "overwrite writer must invalidate the memoized schema")
     // the next read infers the NEW layout — PQ search works end-to-end
     val res = Similarity.ivfPqSearchIndex(spark, idx,
@@ -131,7 +131,7 @@ class SimilaritySpec extends SparkSpec {
       nProbe = 2, rerank = 2).collect()
     assert(res.nonEmpty && res(0).getAs[Long]("neighbor_id") == 1L,
       s"post-relayout read failed: ${res.toSeq}")
-    val memoB = Similarity.memoizedIndexSchema(idx)
+    val memoB = graft.core.Staged.pinnedSchema(idx)
     assert(memoB.isDefined && memoB != memoA,
       "re-read must memoize the new layout's schema")
   }
