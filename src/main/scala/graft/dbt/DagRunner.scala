@@ -3,7 +3,11 @@ package graft.dbt
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.functions.{broadcast, col}
+
+import graft.core.AtomicFiles
+import graft.core.AtomicFiles.Replace
 
 /** Model registry + DAG executor: the Spark-native replacement for dbt's
   * parse/plan/execute lifecycle (SURVEY §3.1 stages 1-3).
@@ -54,8 +58,14 @@ final class ModelRegistry {
 
 /** Executes a registry against a warehouse directory.
   *
+  * Every persisted materialization chooses the frame to write and the
+  * part of the table it replaces, then commits through
+  * [[graft.core.AtomicFiles.publish]]: the write lands in a staging dir
+  * first, so a model that fails at execution leaves its previous table
+  * readable and the next run starts clean.
+  *
   * @param sources   (sourceName, tableName) → raw relation (S1/S2)
-  * @param warehouse dir for Table/Incremental parquet; layout is
+  * @param warehouse dir for Table/Incremental/Snapshot parquet; layout is
   *                  `<warehouse>/<model>` — at cluster scale point this at
   *                  object storage and nothing else changes.
   */
@@ -120,136 +130,29 @@ final class DagRunner(
         case Materialization.View =>
           df.createOrReplaceTempView(name); df
         case Materialization.Table =>
-          df.write.mode("overwrite").parquet(path(name))
-          spark.read.parquet(path(name))
+          publish(name, df, Replace.Whole)
         case Materialization.Snapshot(key, updatedAt) =>
-          val existingOpt =
+          val existing =
             if (!fullRefresh && exists(name))
               Some(spark.read.parquet(path(name)))
             else None
-          val snap = Snapshots.applyBatch(existingOpt, df, key, updatedAt)
-          // staged: the SCD2 plan reads the existing table's files, so an
-          // in-place overwrite would race its own scan
-          val staged = path(name) + "__snap"
-          snap.write.mode("overwrite").parquet(staged)
-          spark.read.parquet(staged).write.mode("overwrite").parquet(path(name))
-          val fs = new org.apache.hadoop.fs.Path(staged)
-            .getFileSystem(spark.sessionState.newHadoopConf())
-          fs.delete(new org.apache.hadoop.fs.Path(staged), true)
-          spark.read.parquet(path(name))
+          publish(name, Snapshots.applyBatch(existing, df, key, updatedAt),
+            Replace.Whole)
         case Materialization.Incremental(keys, _, parts, strategy) =>
-          def partitioned(w: org.apache.spark.sql.DataFrameWriter[
-              org.apache.spark.sql.Row]) =
-            if (parts.nonEmpty) w.partitionBy(parts: _*) else w
-          def rmStaged(staged: String): Unit = {
-            val fs = new org.apache.hadoop.fs.Path(staged)
-              .getFileSystem(spark.sessionState.newHadoopConf())
-            fs.delete(new org.apache.hadoop.fs.Path(staged), true)
-          }
-          self match {
-            case None =>
-              partitioned(df.write.mode("overwrite")).parquet(path(name))
-            case Some(existing)
+          val (rows, replace) = selfRaw match {
+            case None => (df, Replace.Whole)
+            case Some(existingFull)
                 if strategy == Materialization.IncrementalStrategy.Merge =>
-              // MERGE/upsert: batch rows replace same-key rows. Rewrite
-              // only the partitions the batch touches: survivors =
-              // (existing ⋉ touched partitions) ∖ batch keys, staged
-              // together with the batch, then swapped in via DYNAMIC
-              // partition overwrite — untouched partitions never move,
-              // so cost ∝ churn, not table size. The UNSCOPED existing
-              // table is read here (partition pruning is the scope):
-              // scanPredicate bounds the dedup window, but an in-window
-              // rewrite must not drop out-of-window rows that share a
-              // touched partition. Unpartitioned tables degrade to a
-              // staged full rewrite (documented; give a merge model
-              // partitions).
-              //
-              // Touched partitions = batch partition values ∪ partitions
-              // that CURRENTLY hold a batch key: dbt merge matches on
-              // key regardless of location, so a re-delivered key whose
-              // partition-column value changed (e.g. a corrected
-              // event_date) must evict its old row from the OLD
-              // partition too. Finding those rows is a column-pruned
-              // (key + partition cols only) scan of the table — the
-              // price of supporting key relocation; when partitions are
-              // a stable function of the key this returns ⊆ batch
-              // partitions and costs one footer-level scan.
-              val existingFull = spark.read.parquet(path(name))
-              val batchKeys = df.select(keys.map(col): _*).distinct()
-              def bc(d: DataFrame): DataFrame =
-                org.apache.spark.sql.functions.broadcast(d)
-              val touched =
-                if (parts.nonEmpty)
-                  df.select(parts.map(col): _*).distinct().unionByName(
-                    existingFull.join(bc(batchKeys), keys, "left_semi")
-                      .select(parts.map(col): _*).distinct()).distinct()
-                else null
-              val survivors =
-                (if (parts.nonEmpty)
-                  existingFull.join(bc(touched), parts, "left_semi")
-                else existingFull)
-                  .join(batchKeys, keys, "left_anti")
-              val merged = df.unionByName(
-                survivors.select(df.columns.map(col).toIndexedSeq: _*))
-              val staged = path(name) + "__merge"
-              partitioned(merged.write.mode("overwrite")).parquet(staged)
-              // Materialize partition bookkeeping BEFORE the swap: both
-              // plans read the pre-overwrite file listing, which the
-              // dynamic overwrite below invalidates. Bounded by the
-              // touched-partition count (∝ churn, not table size).
-              val vacated: Set[Seq[Any]] =
-                if (parts.isEmpty) Set.empty
-                else {
-                  val stagedParts = spark.read.parquet(staged)
-                    .select(parts.map(col): _*).distinct().collect()
-                    .map(_.toSeq).toSet
-                  touched.collect().map(_.toSeq).toSet -- stagedParts
-                }
-              val prevMode =
-                spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-              try {
-                if (parts.nonEmpty)
-                  spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                    "dynamic")
-                partitioned(spark.read.parquet(staged).write.mode("overwrite"))
-                  .parquet(path(name))
-              } finally
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                  prevMode)
-              // A partition fully VACATED by relocation (its only rows
-              // moved to other partitions) produces zero output rows, so
-              // dynamic overwrite never visits it — its stale directory
-              // must be dropped explicitly.
-              if (vacated.nonEmpty) {
-                import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-                val fs = new org.apache.hadoop.fs.Path(path(name))
-                  .getFileSystem(spark.sessionState.newHadoopConf())
-                for (vals <- vacated) {
-                  val rel = parts.zip(vals).map { case (c, v) =>
-                    val s = if (v == null) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-                            else ExternalCatalogUtils.escapePathName(v.toString)
-                    s"$c=$s"
-                  }.mkString("/")
-                  fs.delete(new org.apache.hadoop.fs.Path(s"${path(name)}/$rel"), true)
-                }
-              }
-              rmStaged(staged)
-            case Some(existing) =>
-              // `existing` is already scanPredicate-scoped above.
-              // Append-only-new-keys guard (D4); the reference models
-              // already NOT-IN-filter, this keeps the contract even if a
-              // model forgets. Write to a staging dir first: appending
-              // while `existing` still lazily reads the same files would
-              // race the scan.
-              val newRows = df.join(existing.select(keys.map(col): _*),
-                keys, "left_anti")
-              val staged = path(name) + "__delta"
-              partitioned(newRows.write.mode("overwrite")).parquet(staged)
-              partitioned(spark.read.parquet(staged).write.mode("append"))
-                .parquet(path(name))
-              rmStaged(staged)
+              merge(df, existingFull, keys, parts)
+            case Some(_) =>
+              // Append-only-new-keys guard (D4) against the
+              // scanPredicate-scoped `self`; the reference models already
+              // NOT-IN-filter, this keeps the contract even if a model
+              // forgets.
+              (df.join(self.get.select(keys.map(col): _*), keys, "left_anti"),
+                Replace.Append)
           }
-          spark.read.parquet(path(name))
+          publish(name, rows, replace, parts)
       }
       built(name) = materialized
 
@@ -262,5 +165,60 @@ final class DagRunner(
       sys.error("schema tests failed: " +
         failures.map { case (t, n) => s"$t($n)" }.mkString(", "))
     built.toMap
+  }
+
+  /** Write `rows` as model `name`'s table, replacing `replace` of it, and
+    * return the committed table.
+    */
+  private def publish(name: String, rows: DataFrame, replace: Replace,
+      parts: Seq[String] = Nil): DataFrame = {
+    AtomicFiles.publish(spark, path(name), replace) { staging =>
+      val w = rows.write
+      (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(staging)
+    }
+    spark.read.parquet(path(name))
+  }
+
+  /** MERGE/upsert: batch rows replace same-key rows. Only the partitions
+    * the batch touches are rewritten — survivors = (existing ⋉ touched
+    * partitions) ∖ batch keys, written together with the batch — so
+    * untouched partitions never move and cost ∝ churn, not table size.
+    * `existingFull` is the UNSCOPED table (partition pruning is the
+    * scope): scanPredicate bounds the dedup window, but an in-window
+    * rewrite must not drop out-of-window rows that share a touched
+    * partition. Unpartitioned tables degrade to a full rewrite (give a
+    * merge model partitions).
+    *
+    * Touched partitions = batch partition values ∪ partitions that
+    * CURRENTLY hold a batch key: dbt merge matches on key regardless of
+    * location, so a re-delivered key whose partition-column value
+    * changed (e.g. a corrected event_date) must evict its old row from
+    * the OLD partition too, and a partition it leaves empty is removed.
+    * Finding those rows is a column-pruned (key + partition cols only)
+    * scan of the table — the price of supporting key relocation; when
+    * partitions are a stable function of the key this returns ⊆ batch
+    * partitions and costs one footer-level scan.
+    */
+  private def merge(df: DataFrame, existingFull: DataFrame,
+      keys: Seq[String], parts: Seq[String]): (DataFrame, Replace) = {
+    val batchKeys = df.select(keys.map(col): _*).distinct()
+    def merged(existing: DataFrame) = df.unionByName(
+      existing.join(batchKeys, keys, "left_anti")
+        .select(df.columns.map(col).toIndexedSeq: _*))
+    if (parts.isEmpty) (merged(existingFull), Replace.Whole)
+    else {
+      val touched =
+        df.select(parts.map(col): _*).distinct().unionByName(
+          existingFull.join(broadcast(batchKeys), keys, "left_semi")
+            .select(parts.map(col): _*).distinct()).distinct()
+      // the writer's own dir naming: each value cast to string in the
+      // session time zone, then escaped
+      val dirs = touched.select(parts.map(col(_).cast("string")): _*)
+        .collect().toSeq.map(r => parts.indices.map(i =>
+          ExternalCatalogUtils.getPartitionPathString(parts(i), r.getString(i)))
+          .mkString("/"))
+      (merged(existingFull.join(broadcast(touched), parts, "left_semi")),
+        Replace.Partitions(dirs))
+    }
   }
 }

@@ -49,7 +49,10 @@ object Materialization {
   case object Ephemeral extends Materialization
   /** D2 — recomputed on read; registered as a temp view. */
   case object View extends Materialization
-  /** D3 — full refresh: overwrite parquet, downstream reads the files. */
+  /** D3 — full refresh: the table is rebuilt into a staging dir and
+    * swapped in whole ([[graft.core.AtomicFiles.publish]]), so a failed
+    * build keeps the previous table; downstream reads the files.
+    */
   case object Table extends Materialization
   /** D4 — first run full build; later runs append rows whose `uniqueKey`
     * is not yet present (the reference's NOT-IN models make this
@@ -113,9 +116,10 @@ object Materialization {
     case object AppendNewKeys extends IncrementalStrategy
     /** dbt `merge`: an incoming row REPLACES the existing row with its
       * key (update-in-place), other rows are preserved. Implemented as
-      * a staged rewrite of only the TOUCHED partitions (dynamic
-      * partition overwrite): at 100 TB, a day's re-delivered snapshots
-      * rewrite that day's partitions, never the table.
+      * a staged rewrite of only the TOUCHED partitions, each swapped in
+      * by directory rename ([[graft.core.AtomicFiles.publish]]): at
+      * 100 TB, a day's re-delivered snapshots rewrite that day's
+      * partitions, never the table.
       */
     case object Merge extends IncrementalStrategy
   }

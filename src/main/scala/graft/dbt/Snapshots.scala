@@ -25,8 +25,9 @@ import org.apache.spark.sql.functions._
   * NEVER rewritten — only the current-version slice joins the batch;
   * persist the table partitioned on an `is_current` flag so the
   * close-out rewrite touches the current partition only and history is
-  * append-only, which composes with the manifest-committed layout for
-  * the swap.
+  * append-only. [[DagRunner]] today rewrites the whole table into a
+  * staging dir and swaps it in through [[graft.core.AtomicFiles.publish]],
+  * which also replaces single partition dirs when given them.
   */
 object Snapshots {
 

@@ -472,42 +472,47 @@ object Bpe {
   }
 
   /** Loop state for [[trainScaledWords]]: persisted to `stateDir` every
-    * `persistEvery` passes (parquet + atomically-renamed manifest), so a
-    * failed 100k-merge training job resumes from the last persisted
-    * pass instead of re-running days of work. */
+    * `persistEvery` passes (parquet dirs `pass_<n>/`, then the pass's
+    * version file in `_state.d/`), so a failed 100k-merge training job
+    * resumes from the last committed pass instead of re-running days of
+    * work. A state dir holds one training run. */
   final case class TrainState(words: DataFrame, counts: DataFrame,
       merges: Seq[Merge], symbols: Set[String], pass: Int)
+
+  private def stateLog(dir: String) =
+    new org.apache.hadoop.fs.Path(dir, "_state.d")
 
   private def persistState(dir: String, st: TrainState): Unit = {
     val spark = st.words.sparkSession
     import spark.implicits._
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val version = new org.apache.hadoop.fs.Path(stateLog(dir), f"${st.pass}%09d")
+    // a committed pass is immutable: the run's closing persist repeats
+    // the last in-loop one, and a resume without progress repeats the tip
+    if (fs.exists(version)) return
     val step = s"pass_${st.pass}"
+    // overwrite: a crashed attempt's uncommitted dirs are discardable
     st.words.write.mode("overwrite").parquet(s"$dir/$step/words")
     st.counts.write.mode("overwrite").parquet(s"$dir/$step/counts")
     st.symbols.toSeq.toDF("symbol")
       .write.mode("overwrite").parquet(s"$dir/$step/symbols")
     st.merges.toDF().write.mode("overwrite").parquet(s"$dir/$step/merges")
-    // manifest last, atomically: readers never see a half-written step
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(root, "_MANIFEST.tmp")
-    val out = fs.create(tmp, true)
-    out.write(step.getBytes("UTF-8")); out.close()
-    val dst = new org.apache.hadoop.fs.Path(root, "_MANIFEST")
-    if (fs.exists(dst)) fs.delete(dst, false)
-    fs.rename(tmp, dst)
+    // the version file last, with its full content at once: a pass
+    // whose dirs are written but whose version file is not is invisible
+    require(graft.core.AtomicFiles.publishExclusive(fs, version,
+      step.getBytes("UTF-8")),
+      s"training state $step under $dir was committed by another writer")
   }
 
-  /** Load the last persisted [[TrainState]] from `stateDir`. */
+  /** Load the last committed [[TrainState]] from `stateDir`. */
   def loadState(spark: SparkSession, stateDir: String): TrainState = {
     import spark.implicits._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = root.getFileSystem(conf)
-    val in = fs.open(new org.apache.hadoop.fs.Path(root, "_MANIFEST"))
-    val step = scala.io.Source.fromInputStream(in).mkString.trim
-    in.close()
+    val fs = new org.apache.hadoop.fs.Path(stateDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val passes = graft.core.AtomicFiles.listVersions(fs, stateLog(stateDir))
+    require(passes.nonEmpty, s"no committed training state under $stateDir")
+    val step = s"pass_${passes.last}"
     val merges = spark.read.parquet(s"$stateDir/$step/merges").as[Merge]
       .collect().sortBy(_.rank).toSeq
     TrainState(
@@ -515,7 +520,7 @@ object Bpe {
       spark.read.parquet(s"$stateDir/$step/counts"),
       merges,
       spark.read.parquet(s"$stateDir/$step/symbols").as[String].collect().toSet,
-      step.stripPrefix("pass_").toInt)
+      passes.last.toInt)
   }
 
   /** Scaled BPE training over a prepared word table (`syms`
@@ -539,9 +544,9 @@ object Bpe {
     *    is O(affected words)/batch, not O(all words) — the full table
     *    is touched map-only, shuffled never.
     *  - **Fault-tolerant state**: with `stateDir` set, words/counts/
-    *    merges/symbols persist every `persistEvery` passes behind an
-    *    atomically-renamed manifest; [[resumeScaledWords]] continues
-    *    from the last persisted pass.
+    *    merges/symbols persist every `persistEvery` passes, each pass
+    *    committed by an atomically published version file;
+    *    [[resumeScaledWords]] continues from the last committed pass.
     */
   def trainScaledWords(words0: DataFrame, numMerges: Int,
       minCount: Long = 2L, batchCap: Int = 64, viewSize: Int = 512,

@@ -58,69 +58,43 @@ object Warehouse {
     * value in a single task, so every partition directory compacts to one
     * file (plus `maxRecordsPerFile` splits for oversized partitions).
     *
-    * Swap semantics — be precise about what the two renames give you:
-    * each rename is atomic on HDFS and local filesystems, but BETWEEN
-    * them the table path does not exist, so a reader that lists exactly
-    * in that window gets FileNotFound (a brief unavailability window,
-    * NOT a partial mix — it never sees old and new files together). A
-    * crash inside the window leaves the data intact at `.compact-old`;
-    * recovery is a manual rename back, and this method fails fast on a
-    * stale `.compact-old` rather than silently nesting the live table
-    * inside it (Hadoop's rename-into-existing-directory semantics would
-    * otherwise MOVE `path` under the stale dir instead of failing).
-    * On object stores (S3A) rename is a non-atomic O(n) copy — do not
-    * use this there; use the manifest-committed layout
-    * ([[manifestInit]]/[[compactManifest]]) whose pointer swap is a
-    * single-key atomic create with zero reader unavailability.
+    * The rewrite commits through [[graft.core.AtomicFiles.publish]],
+    * the same whole-table swap as a dbt table build: a failed rewrite
+    * leaves the table untouched, a stale `.compact-old` (a crashed swap)
+    * fails fast, and a stale `.compact-tmp` is discarded. On object
+    * stores (S3A) rename is a non-atomic O(n) copy — do not use this
+    * there; keep such tables as delta logs and fold them with
+    * [[compactDeltaLog]], whose commit is a single-key atomic create
+    * with zero reader unavailability.
     */
   def compact(spark: SparkSession, path: String,
       partitionCol: String = "p_date",
-      maxRecordsPerFile: Long = 1L << 22): Unit = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(path + ".compact-tmp")
-    val old = new Path(path + ".compact-old")
-    // Stale .compact-old means a previous swap crashed mid-flight and
-    // the ORIGINAL data may live there — never delete it, make the
-    // operator resolve it first.
-    require(!fs.exists(old),
-      s"compact: stale $old exists (a prior compact crashed mid-swap); " +
-        "inspect and restore/remove it before compacting")
-    // Stale .compact-tmp is always a discardable partial rewrite.
-    fs.delete(tmp, true)
-    spark.read.parquet(path)
-      .repartition(col(partitionCol))
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy(partitionCol)
-      .parquet(tmp.toString)
-    require(fs.rename(p, old), s"compact: could not stage $path aside")
-    require(fs.rename(tmp, p), s"compact: could not swap in $tmp")
-    fs.delete(old, true)
-  }
+      maxRecordsPerFile: Long = 1L << 22): Unit =
+    graft.core.AtomicFiles.publish(spark, path,
+        graft.core.AtomicFiles.Replace.Whole) { staging =>
+      spark.read.parquet(path)
+        .repartition(col(partitionCol))
+        .write
+        .option("maxRecordsPerFile", maxRecordsPerFile)
+        .partitionBy(partitionCol)
+        .parquet(staging)
+    }
 
-  // ---- Manifest-committed tables: the object-store-safe swap --------
+  // ---- Delta-log manifest tables: append cost ∝ delta ---------------
   //
-  // `compact` above swaps via two directory renames — atomic on HDFS /
-  // local filesystems, but an O(n) non-atomic copy on object stores.
-  // The object-store-correct primitive is a POINTER swap: data lives in
-  // immutable generation directories `<root>/gen-<version>`, and a tiny
-  // manifest file names the live one. Commit order:
-  //
-  //   1. write the new generation dir (invisible to readers),
-  //   2. create `<root>/_manifest/<version>` (create-if-absent, one
-  //      key) whose CONTENT is the generation dir name.
-  //
-  // A single-key create is atomic on S3/GCS/ABFS and on HDFS, so a
-  // reader either resolves the old version or the new one — never a
-  // partial mix, and with NO unavailability window (contrast the rename
-  // swap's listing gap). Create-if-absent doubles as optimistic
-  // concurrency: two racing committers cannot both win a version.
-  // Readers resolving mid-compaction keep a consistent snapshot because
-  // superseded generations are retained until an explicit
-  // [[manifestVacuum]] (the Delta/Iceberg VACUUM discipline; deleting
-  // eagerly would yank files out from under an in-flight scan).
+  // Data lives in immutable generation directories `<root>/gen-*`, and
+  // `<root>/_manifest/<version>` files name the committed ones. A
+  // version file is created with create-if-absent (one key), atomic on
+  // S3/GCS/ABFS and on HDFS, so a reader resolves the old version or the
+  // new one — never a partial mix, and with no unavailability window —
+  // and two racing committers cannot both win a version. Each
+  // generation holds ONLY its commit's rows and a read unions every
+  // committed generation — the Delta/Iceberg add-files discipline
+  // reduced to its core (a 100 TB signature index must never be
+  // rewritten to admit a 100 GB delivery). Readers resolve the manifest
+  // once and pin that version's generation list; a racing append
+  // commits version v+1 without disturbing them. [[compactDeltaLog]]
+  // folds generations back together when the file count grows.
 
   private val ManifestDir = "_manifest"
   private def manifestPath(root: String) = new org.apache.hadoop.fs.Path(
@@ -128,21 +102,6 @@ object Warehouse {
   private def fsOf(spark: SparkSession, root: String) =
     new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** (version, generation-dir-name) of the live generation; error if the
-    * table has no manifest (see [[manifestInit]]).
-    */
-  def manifestResolve(spark: SparkSession, root: String): (Long, String) = {
-    val fs = fsOf(spark, root)
-    val entries = fs.listStatus(manifestPath(root))
-      .map(_.getPath.getName).filter(_.forall(_.isDigit))
-    require(entries.nonEmpty, s"no manifest versions under $root/$ManifestDir")
-    val v = entries.map(_.toLong).max
-    val in = fs.open(new org.apache.hadoop.fs.Path(manifestPath(root), f"$v%09d"))
-    val gen = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-    finally in.close()
-    (v, gen)
-  }
 
   private[graft] def manifestCommit(spark: SparkSession, root: String,
       version: Long, gen: String): Unit = {
@@ -158,83 +117,6 @@ object Warehouse {
         gen.getBytes("UTF-8")))
       throw new org.apache.hadoop.fs.FileAlreadyExistsException(p.toString)
   }
-
-  /** Initialize a manifest-committed table at `root` from `df` (becomes
-    * generation 1). Layout: `<root>/gen-000000001/` + manifest entry.
-    */
-  def manifestInit(df: DataFrame, root: String,
-      partitionCols: Seq[String] = Nil): Unit = {
-    val gen = f"gen-${1L}%09d"
-    val w = df.write.mode("errorifexists")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(s"$root/$gen")
-    manifestCommit(df.sparkSession, root, 1L, gen)
-  }
-
-  /** Read the live generation of a manifest-committed table. The
-    * returned plan is pinned to that generation's files — concurrent
-    * compactions commit NEW generations, so the snapshot stays valid
-    * until a vacuum reclaims it.
-    */
-  def manifestRead(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(s"$root/${manifestResolve(spark, root)._2}")
-
-  /** Small-file compaction via manifest pointer swap — same rewrite as
-    * [[compact]], object-store-safe swap semantics, zero reader
-    * unavailability. The superseded generation stays on disk until
-    * [[manifestVacuum]].
-    */
-  def compactManifest(spark: SparkSession, root: String,
-      partitionCol: String = "p_date",
-      maxRecordsPerFile: Long = 1L << 22): Unit = {
-    val (v, gen) = manifestResolve(spark, root)
-    val next = f"gen-${v + 1}%09d"
-    spark.read.parquet(s"$root/$gen")
-      .repartition(col(partitionCol))
-      .write.mode("errorifexists")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy(partitionCol)
-      .parquet(s"$root/$next")
-    manifestCommit(spark, root, v + 1, next)
-  }
-
-  /** Reclaim superseded generations, keeping the live one plus the
-    * `retain` most recent predecessors (grace window for in-flight
-    * readers — the operator's retention policy, exactly like VACUUM).
-    */
-  def manifestVacuum(spark: SparkSession, root: String,
-      retain: Int = 1): Unit = {
-    val fs = fsOf(spark, root)
-    val entries = fs.listStatus(manifestPath(root))
-      .map(_.getPath.getName).filter(_.forall(_.isDigit))
-      .map(_.toLong).sorted
-    val keep = entries.takeRight(retain + 1).toSet
-    for (v <- entries if !keep(v)) {
-      val mp = new org.apache.hadoop.fs.Path(manifestPath(root), f"$v%09d")
-      val in = fs.open(mp)
-      val gen = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-      // delete data first, then the manifest entry: a crash between the
-      // two leaves a dangling (harmless) manifest row, never a live
-      // manifest naming missing data
-      fs.delete(new org.apache.hadoop.fs.Path(root, gen), true)
-      fs.delete(mp, false)
-    }
-  }
-
-  // ---- Delta-log manifest tables: append cost ∝ delta ---------------
-  //
-  // The snapshot manifest above rewrites a full generation per commit —
-  // right for compaction, wrong for an append-only index that grows by
-  // one small delivery at a time (a 100 TB signature index must never be
-  // rewritten to admit a 100 GB delivery). The delta-log variant keeps
-  // the SAME atomic single-key commit, but each generation holds ONLY
-  // its commit's rows and a read unions every committed generation —
-  // the Delta/Iceberg add-files discipline reduced to its core. Readers
-  // resolve the manifest once and pin that version's generation list;
-  // a racing append commits version v+1 without disturbing them.
-  // Periodic [[compactManifest]]-style rewrites would fold generations
-  // back together when the file count grows; not needed at gate scale.
 
   /** Versions committed to a delta-log table, ascending (empty when the
     * table does not exist yet).

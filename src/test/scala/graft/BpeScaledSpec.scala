@@ -125,4 +125,27 @@ class BpeScaledSpec extends SparkSpec {
       minCount = 1L, batchCap = 4, viewSize = 16)
     assert(resumed == full)
   }
+
+  test("loadState skips a pass whose dirs exist but whose commit is missing") {
+    val docs = (0 until 40).map(i => s"lo${i % 4} ad st${i % 3} ate")
+      .toDF("text")
+    val words = Bpe.wordFreqs(docs)
+      .select(Bpe.charSymbols(col("word")).as("syms"), col("freq"))
+    val dir = tmpDir("bpe-uncommitted")
+    val merges = Bpe.trainScaledWords(words, numMerges = 8, minCount = 1L,
+      batchCap = 2, viewSize = 16, stateDir = Some(dir), persistEvery = 1)
+    val tip = Bpe.loadState(spark, dir)
+    assert(tip.merges == merges && tip.pass > 0)
+    // a crash after a later pass wrote its dirs but before its commit
+    val later = s"$dir/pass_${tip.pass + 1}"
+    Seq("words", "counts", "symbols", "merges").foreach(d =>
+      spark.read.parquet(s"$dir/pass_${tip.pass}/$d").limit(1)
+        .write.parquet(s"$later/$d"))
+    val loaded = Bpe.loadState(spark, dir)
+    assert(loaded.pass == tip.pass)
+    assert(loaded.merges == merges)
+    // resuming from there repeats the committed tip, not the torn pass
+    assert(Bpe.resumeScaledWords(spark, dir, numMerges = 8, minCount = 1L,
+      batchCap = 2, viewSize = 16) == merges)
+  }
 }

@@ -18,8 +18,12 @@ class CompactionSpec extends SparkSpec {
       Warehouse.committedGenerations(spark, root).map(g => s"$root/$g"): _*)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(Warehouse.committedGenerations(spark, root).size == 3)
+    // a reader resolved before the fold keeps its generation list
+    val pinned = Warehouse.deltaRead(spark, root)
 
     Warehouse.compactDeltaLog(spark, root)
+    assert(pinned.count() == 4,
+      "a pre-compaction read must still scan its retained generations")
     // one live generation, same rows
     val liveGens = Warehouse.committedGenerations(spark, root)
     assert(liveGens.size == 1 && liveGens.head.startsWith("gen-compact-"))
@@ -32,6 +36,14 @@ class CompactionSpec extends SparkSpec {
       Seq((99L, "dup")).toDF("id", "v"), root, "t4").isEmpty)
     assert(Warehouse.deltaRead(spark, root).count() == 4)
 
+    // a commit at a taken version fails and leaves the tip untouched
+    val tip = Warehouse.deltaVersions(spark, root).last
+    intercept[org.apache.hadoop.fs.FileAlreadyExistsException] {
+      Warehouse.manifestCommit(spark, root, tip, "gen-bogus")
+    }
+    assert(Warehouse.deltaVersions(spark, root).last == tip)
+    assert(Warehouse.committedGenerations(spark, root) == liveGens)
+
     // appends continue after the snapshot; reads union snapshot + delta
     Warehouse.deltaAppend(Seq((5L, "e")).toDF("id", "v"), root)
     assert(Warehouse.committedGenerations(spark, root).size == 2)
@@ -40,6 +52,8 @@ class CompactionSpec extends SparkSpec {
     // vacuum removes only folded dirs; the live read is untouched
     val victims = Warehouse.vacuumDeltaLog(spark, root)
     assert(victims.nonEmpty && !victims.exists(liveGens.contains))
+    victims.foreach(v => assert(!new java.io.File(s"$root/$v").exists(),
+      s"vacuum must reclaim the folded generation $v"))
     assert(Warehouse.deltaRead(spark, root).count() == 5)
   }
 

@@ -338,17 +338,36 @@ class ContractSpec extends SparkSpec {
   // or temp root in a query module would be one more cache every writer
   // must know to invalidate.
   test("query modules stage through graft.core.Staged only") {
-    val dir = java.nio.file.Paths.get("src/main/scala/graft/queries")
-    val ls = java.nio.file.Files.list(dir)
-    val files = try scala.jdk.CollectionConverters
-      .IteratorHasAsScala(ls.iterator()).asScala.toList finally ls.close()
-    val offenders = files.filter(_.toString.endsWith(".scala")).flatMap { f =>
-      val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      Seq("ConcurrentHashMap", "createTempDirectory")
-        .filter(src.contains).map(w => s"${f.getFileName}: $w")
-    }
+    val (files, offenders) = sourcesContaining("src/main/scala/graft/queries",
+      Seq("ConcurrentHashMap", "createTempDirectory"))
     assert(files.nonEmpty && offenders.isEmpty,
       s"stage through graft.core.Staged instead: ${offenders.mkString(", ")}")
+  }
+
+  // The table-commit policy (staging dir, swap, partition replacement)
+  // lives in graft.core.AtomicFiles.publish alone; a session-conf flip
+  // or a hand-rolled rename in the dbt layer would be a second commit
+  // protocol with its own failure modes.
+  test("dbt materializations commit through AtomicFiles.publish only") {
+    val (files, offenders) = sourcesContaining("src/main/scala/graft/dbt",
+      Seq("partitionOverwriteMode", "spark.conf.set", ".rename("))
+    assert(files.nonEmpty && offenders.isEmpty,
+      s"commit through AtomicFiles.publish instead: ${offenders.mkString(", ")}")
+  }
+
+  /** The `.scala` files directly under `dir`, and "file: word" for each
+    * of `words` one of them contains.
+    */
+  private def sourcesContaining(dir: String, words: Seq[String])
+      : (Seq[java.nio.file.Path], Seq[String]) = {
+    val ls = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+    val files = try scala.jdk.CollectionConverters
+      .IteratorHasAsScala(ls.iterator()).asScala.toList
+      .filter(_.toString.endsWith(".scala")) finally ls.close()
+    (files, files.flatMap { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      words.filter(src.contains).map(w => s"${f.getFileName}: $w")
+    })
   }
 
   // Rounds 13-17 all flagged round artifacts left untracked/modified at

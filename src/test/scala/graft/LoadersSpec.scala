@@ -156,49 +156,6 @@ class LoadersSpec extends SparkSpec {
     assert(b.count() == 2)
   }
 
-  test("manifest-committed compaction: readers stay consistent through the swap; vacuum reclaims") {
-    import graft.sources.Warehouse
-    val root = tmpDir("manifest-tbl") + "/t"
-    val df = spark.range(0, 100)
-      .selectExpr("id", "cast(id % 3 as string) as p_date")
-    Warehouse.manifestInit(df, root, partitionCols = Seq("p_date"))
-
-    // a reader resolves generation 1 and holds its snapshot open
-    val snapshot = Warehouse.manifestRead(spark, root)
-    assert(snapshot.count() == 100)
-    val (v1, gen1) = Warehouse.manifestResolve(spark, root)
-    assert(v1 == 1L)
-
-    // compact: new generation + pointer swap — no rename, no window
-    Warehouse.compactManifest(spark, root, "p_date")
-    val (v2, gen2) = Warehouse.manifestResolve(spark, root)
-    assert(v2 == 2L && gen2 != gen1)
-    // the CONCURRENT reader's pre-swap snapshot still scans cleanly
-    // (superseded generation retained until vacuum)
-    assert(snapshot.count() == 100)
-    assert(Warehouse.manifestRead(spark, root).count() == 100)
-    // compaction did its job: one file per partition in the live gen
-    val files = new java.io.File(s"$root/$gen2")
-      .listFiles().filter(_.getName.startsWith("p_date="))
-      .flatMap(_.listFiles()).count(_.getName.endsWith(".parquet"))
-    assert(files == 3, s"expected 3 compacted files, got $files")
-
-    // racing committers: the create-if-absent commit is exclusive — a
-    // second committer attempting the version that already won must
-    // fail, never clobber the pointer
-    intercept[Exception] {
-      Warehouse.manifestCommit(spark, root, v2, "gen-bogus")
-    }
-    assert(Warehouse.manifestResolve(spark, root)._2 == gen2,
-      "a lost commit race must leave the winning pointer untouched")
-
-    // vacuum with retain=0 drops every superseded generation
-    Warehouse.manifestVacuum(spark, root, retain = 0)
-    assert(!new java.io.File(s"$root/$gen1").exists(),
-      "vacuum must reclaim superseded generations")
-    assert(Warehouse.manifestRead(spark, root).count() == 100)
-  }
-
   test("Warehouse.compact fails fast on a stale .compact-old, cleans stale tmp") {
     val dir = tmpDir("compact-stale") + "/t"
     Seq((1L, "2025-01-01", 1.0)).toDF("id", "p_date", "v")
