@@ -38,7 +38,8 @@ object CurationProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val workDir = args.lift(1).getOrElse("/tmp/graft_scale")
-    val spark = graft.core.GraftSession.local("curation-probe", 32)
+    val spark = graft.core.GraftSession.local("curation-probe",
+      graft.core.GraftSession.cpus())
     spark.sparkContext.setLogLevel("ERROR")
     val cfg = CurationPipeline.Config() // production defaults, 0.8 near-dup
     println(f"${"scale"}%-5s ${"stage"}%-7s ${"min(s)"}%7s  rows")

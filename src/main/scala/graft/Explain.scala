@@ -17,17 +17,19 @@ object Explain {
     val rest = args.drop(1).filterNot(_ == "--executed").toSeq
     val names = if (rest.nonEmpty) rest
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = graft.core.GraftSession.local("graft-explain", cores = 8)
-    // opt into the imperative-stage capture (addDelivery et al. skip
-    // the per-stage plan rendering unless someone is reading it)
-    graft.core.PlanAudit.enabled = true
+    val spark = graft.core.GraftSession.local("graft-explain",
+      cores = graft.core.GraftSession.cpus())
     names.foreach { name =>
-      graft.llm.IncrementalDedup.lastStagePlans = Nil
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      if (executed) {
-        // run THIS QueryExecution's plan (a noop write would build its
-        // own QueryExecution and leave df's AdaptiveSparkPlan unfinalized)
-        df.queryExecution.toRdd.foreach(_ => ())
+      // under an audit, imperative pipelines (addDelivery et al.) note
+      // their per-stage plan shapes, which they skip otherwise
+      val (df, notes) = graft.core.Trace.audit {
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        if (executed) {
+          // run THIS QueryExecution's plan (a noop write would build its
+          // own QueryExecution and leave df's AdaptiveSparkPlan unfinalized)
+          df.queryExecution.toRdd.foreach(_ => ())
+        }
+        df
       }
       val plan =
         if (executed) df.queryExecution.executedPlan.toString
@@ -35,13 +37,11 @@ object Explain {
           org.apache.spark.sql.execution.FormattedMode)
       val (shuffles, bcasts, scans) = graft.core.PlanAudit.counts(df)
       println(s"\n########## $name  [shuffles=$shuffles broadcasts=$bcasts scans=$scans]")
-      // imperative pipelines (addDelivery) surface their internal
-      // stages through the side channel — one audit row per stage, so
-      // the table shows what actually shuffles, not just the
-      // post-admission read
-      graft.llm.IncrementalDedup.lastStagePlans.foreach { st =>
-        println(s"########## $name/${st.name}  [shuffles=${st.shuffles} " +
-          s"broadcasts=${st.broadcasts} scans=${st.scans}]")
+      // one audit row per noted imperative stage, so the table shows
+      // what actually shuffles, not just the post-admission read
+      notes(graft.core.PlanAudit.StageCounts).foreach {
+        case (stage, (s, b, p)) =>
+          println(s"########## $name/$stage  [shuffles=$s broadcasts=$b scans=$p]")
       }
       println(plan)
       spark.catalog.clearCache() // executed persists must not leak across gates

@@ -31,7 +31,8 @@ object NeardupProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val workDir = args.lift(1).getOrElse("/tmp/graft_scale")
-    val spark = graft.core.GraftSession.local("neardup-probe", 32)
+    val spark = graft.core.GraftSession.local("neardup-probe",
+      graft.core.GraftSession.cpus())
     spark.sparkContext.setLogLevel("ERROR")
     println(f"${"scale"}%-5s ${"stage"}%-7s ${"min(s)"}%7s  rows")
     for (mult <- Seq(1, 3, 10)) {

@@ -67,7 +67,8 @@ object NgramAb {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val rounds = args.lift(1).map(_.toInt).getOrElse(5)
-    val spark = graft.core.GraftSession.local("graft-ngram-ab", cores = 32)
+    val spark = graft.core.GraftSession.local("graft-ngram-ab",
+      cores = graft.core.GraftSession.cpus())
     spark.sparkContext.setLogLevel("ERROR")
     val docs = graft.sources.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"))

@@ -8,7 +8,8 @@ import graft.llm.Similarity
 object PqProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = graft.core.GraftSession.local("graft-pq-probe", cores = 8)
+    val spark = graft.core.GraftSession.local("graft-pq-probe",
+      cores = graft.core.GraftSession.cpus())
     spark.sparkContext.setLogLevel("ERROR")
     val e = graft.sources.Tables.embeddings(spark, sfDir)
     val q = e.filter(col("vec_id") < 16)

@@ -15,7 +15,7 @@ object RecallProbe {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")
     val spark = graft.core.GraftSession.local("graft-recall-probe",
-      Runtime.getRuntime.availableProcessors())
+      graft.core.GraftSession.cpus())
     for (dir <- dirs) {
       val e = graft.sources.Tables.embeddings(spark, dir)
       val q = e.filter(col("vec_id") < 8)

@@ -168,19 +168,24 @@ object ScaleCurve {
         .filter(col("id") % len =!= (len - 1))
         .select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
       val nEdges = chains * (len - 1) // 1.53M > the 1M driver cap
-      def run(maxPairsForDriver: Long): (Double, DataFrame) = {
+      // (seconds, labels, distributed CC rounds; 0 on the driver path)
+      def clusters(pairs: => DataFrame,
+          maxPairsForDriver: Long): (Double, DataFrame, Int) = {
         val t0 = System.nanoTime()
-        val labels = graft.llm.Dedup.duplicateClusters(chainPairs(spark),
-          driverMaxPairs = maxPairsForDriver)
+        val (labels, notes) = graft.core.Trace.capture(
+          graft.llm.Dedup.duplicateClusters(pairs,
+            driverMaxPairs = maxPairsForDriver))
         labels.write.format("noop").mode("overwrite").save()
-        ((System.nanoTime() - t0) / 1e9, labels)
+        ((System.nanoTime() - t0) / 1e9, labels,
+          notes.last(graft.llm.Dedup.CcRounds).getOrElse(0))
       }
-      val (tDist, distLabels) = run(1000000L) // forced distributed branch
-      val rounds = graft.llm.Dedup.lastCcRounds
+      // forced distributed branch
+      val (tDist, distLabels, rounds) = clusters(chainPairs(spark), 1000000L)
       // every node's cluster must be its chain head: floor(id/len)*len
       val wrong = distLabels
         .filter(col("cluster_id") =!= (col("id") - (col("id") % len))).count()
-      val (tDriver, _) = run(Long.MaxValue) // driver union-find, same edges
+      // driver union-find, same edges
+      val (tDriver, _, _) = clusters(chainPairs(spark), Long.MaxValue)
       println(f"SCALE ${"cc_distributed(1.53M edges)"}%-28s " +
         f"$tDriver%6.3f  $tDist%6.3f  ${tDist / tDriver}%5.2f  " +
         f"rounds=$rounds (diameter ${len - 1}, log2=10) wrong=$wrong " +
@@ -201,18 +206,10 @@ object ScaleCurve {
           .union(base.select((col("id") * 3).as("id_a"), (col("id") * 3 + 2).as("id_b")))
           .union(base.select((col("id") * 3 + 1).as("id_a"), (col("id") * 3 + 2).as("id_b")))
       }
-      def runStars(maxPairsForDriver: Long): (Double, DataFrame) = {
-        val t0 = System.nanoTime()
-        val labels = graft.llm.Dedup.duplicateClusters(starPairs(spark),
-          driverMaxPairs = maxPairsForDriver)
-        labels.write.format("noop").mode("overwrite").save()
-        ((System.nanoTime() - t0) / 1e9, labels)
-      }
-      val (tDistS, distS) = runStars(1000000L)
-      val roundsS = graft.llm.Dedup.lastCcRounds
+      val (tDistS, distS, roundsS) = clusters(starPairs(spark), 1000000L)
       val wrongS = distS
         .filter(col("cluster_id") =!= (col("id") - (col("id") % 3))).count()
-      val (tDriverS, _) = runStars(Long.MaxValue)
+      val (tDriverS, _, _) = clusters(starPairs(spark), Long.MaxValue)
       println(f"SCALE ${"cc_distributed(510k cliques)"}%-28s " +
         f"$tDriverS%6.3f  $tDistS%6.3f  ${tDistS / tDriverS}%5.2f  " +
         f"rounds=$roundsS (diameter 1) wrong=$wrongS edges=1530000")
@@ -250,17 +247,13 @@ object ScaleCurve {
       }
       // small buckets so the banded fan-out engages at probe scale (the
       // production default only fans out past 64k rows per band).
-      // TWO layout instances per index: the TIMED lookup runs the
-      // production shape (no audit), because auditPartitions forces a
-      // full-table directory listing per call — cost ∝ total partition
-      // dirs, i.e. ∝ index size, which super-linearized the curve row
-      // (r19: 12.4× at 10× with the audit inside the timed region) and
-      // is exactly the double-listing the flag's scaladoc warns about;
-      // the pruning COUNTS come from one separate audited call outside
-      // the timing loop.
-      def banded = BandedIndex(minBucketRows = 512)
-      def bandedAudit = BandedIndex(minBucketRows = 512,
-        auditPartitions = true)
+      // The TIMED lookup runs the production shape (no audit), because
+      // the audited partition counts force a full-table directory
+      // listing per call — cost ∝ total partition dirs, i.e. ∝ index
+      // size, which super-linearized the curve row (r19: 12.4× at 10×
+      // with the audit inside the timed region); the pruning COUNTS
+      // come from one separate audited call outside the timing loop.
+      val banded = BandedIndex(minBucketRows = 512)
       def buildIdx(dir: String, tag: String,
           layout: IncrementalDedup.IndexLayout): String = {
         val root = s"$workDir/lookup_idx_$tag"
@@ -280,21 +273,19 @@ object ScaleCurve {
       val tFN = timeLookup(IncrementalDedup.FlatIndex
         .candidateSide(spark, fN, keys, 8, 4))
       println(f"SCALE ${"incdedup_lookup(flat)"}%-28s $tF1%6.3f  $tFN%6.3f  ${tFN / tF1}%5.2f")
-      val lay1 = banded
-      val layN = banded
-      val b1 = buildIdx(sfDir, "band_1x", lay1)
-      val bN = buildIdx(bigDir, s"band_${mult}x", layN)
-      val tB1 = timeLookup(lay1.candidateSide(spark, b1, keys, 8, 4))
-      val tBN = timeLookup(layN.candidateSide(spark, bN, keys, 8, 4))
+      val b1 = buildIdx(sfDir, "band_1x", banded)
+      val bN = buildIdx(bigDir, s"band_${mult}x", banded)
+      val tB1 = timeLookup(banded.candidateSide(spark, b1, keys, 8, 4))
+      val tBN = timeLookup(banded.candidateSide(spark, bN, keys, 8, 4))
       // pruning evidence from ONE audited call per index, un-timed
-      val aud1 = bandedAudit
-      aud1.candidateSide(spark, b1, keys, 8, 4)
-        .write.format("noop").mode("overwrite").save()
-      val p1 = (aud1.lastScannedPartitions, aud1.lastTotalPartitions)
-      val audN = bandedAudit
-      audN.candidateSide(spark, bN, keys, 8, 4)
-        .write.format("noop").mode("overwrite").save()
-      val pN = (audN.lastScannedPartitions, audN.lastTotalPartitions)
+      def dirs(root: String): (Int, Int) = {
+        val (side, notes) = graft.core.Trace.audit(
+          banded.candidateSide(spark, root, keys, 8, 4))
+        side.write.format("noop").mode("overwrite").save()
+        notes.last(BandedIndex.Partitions).getOrElse((-1, -1))
+      }
+      val p1 = dirs(b1)
+      val pN = dirs(bN)
       println(f"SCALE ${"incdedup_lookup(banded)"}%-28s $tB1%6.3f  $tBN%6.3f  ${tBN / tB1}%5.2f  " +
         f"dirs=${p1._1}/${p1._2}@1x ${pN._1}/${pN._2}@${mult}x")
       keys.unpersist()

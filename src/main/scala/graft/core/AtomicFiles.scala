@@ -1,5 +1,6 @@
 package graft.core
 
+import scala.util.control.NonFatal
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
@@ -93,7 +94,8 @@ object AtomicFiles {
       } catch {
         case e: Throwable =>
           try { if (fs.exists(tmp)) fs.delete(tmp, false) }
-          catch { case _: Throwable => () }
+          // best effort: readers skip a leftover .tmp; `e` must surface
+          catch { case NonFatal(_) => () }
           throw e
       }
     }

@@ -1,5 +1,6 @@
 package graft.core
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.DataFrame
 
 /** Block-manager hygiene helpers shared by the long-lived lifecycle
@@ -17,8 +18,9 @@ object CacheUtil {
     * ContextCleaner GC if the plan shape ever changes.
     */
   def freeCheckpoint(df: DataFrame): Unit =
+    // best effort: ContextCleaner still frees the blocks if this fails
     try df.queryExecution.logical.collectLeaves().foreach {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
       case _ => ()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
 }

@@ -4,23 +4,24 @@ import org.apache.spark.sql.DataFrame
 
 /** Physical-plan operator counts for the PLANS.md audit — shared by
   * `graft.Explain` (whole gate queries) and the imperative pipelines
-  * that surface their internal stages through a side channel (the
-  * `Dedup.lastCcRounds` pattern): a pipeline like
-  * `IncrementalDedup.addDelivery` runs several materializations the
-  * top-level query plan never shows, and the audit table would
+  * that note their internal stages under [[StageCounts]]: a pipeline
+  * like `IncrementalDedup.addDelivery` runs several materializations
+  * the top-level query plan never shows, and the audit table would
   * otherwise record its post-admission read (one parquet scan) as if
-  * that were the work.
+  * that were the work. [[counts]] renders the FULL formatted physical
+  * plan — tens of milliseconds per multi-join tree — so pipelines note
+  * stages only under `if (Trace.auditing)` (`graft.Explain`).
   */
 object PlanAudit {
 
-  /** Stage-capture toggle. [[counts]] renders the FULL formatted
-    * physical plan — analysis + optimization + physical planning for
-    * every audited stage, tens of milliseconds per multi-join tree —
-    * so imperative pipelines must only pay it when someone is actually
-    * reading the audit (`graft.Explain` → PLANS.md). Default off:
-    * Bench/Verify measure the engine, not the audit.
-    */
-  @volatile var enabled: Boolean = false
+  /** One audited stage of an imperative pipeline: (name, [[counts]]). */
+  val StageCounts = Trace.Key[(String, (Int, Int, Int))]("plan.stage")
+
+  /** Note each named stage's [[counts]] under [[StageCounts]]. */
+  def noteStages(stages: Seq[(String, DataFrame)]): Unit =
+    stages.foreach { case (name, df) =>
+      Trace.note(StageCounts, name -> counts(df))
+    }
 
   /** (shuffles, broadcasts, parquet scans) of `df`'s physical plan. */
   def counts(df: DataFrame): (Int, Int, Int) = {
@@ -32,14 +33,5 @@ object PlanAudit {
     ("""[+:]- Exchange""".r.findAllIn(tree).size,
       "BroadcastExchange".r.findAllIn(tree).size,
       "Scan parquet".r.findAllIn(tree).size)
-  }
-
-  /** One audited stage of an imperative pipeline. */
-  final case class Stage(name: String, shuffles: Int, broadcasts: Int,
-      scans: Int)
-
-  def stage(name: String, df: DataFrame): Stage = {
-    val (s, b, p) = counts(df)
-    Stage(name, s, b, p)
   }
 }

@@ -74,12 +74,19 @@ object BandedIndex {
       org.apache.spark.sql.types.IntegerType),
     org.apache.spark.sql.types.StructField("bkt",
       org.apache.spark.sql.types.IntegerType)))
+
+  /** Whether a candidate lookup took the pruned path (noted per lookup). */
+  val Pruned = graft.core.Trace.Key[Boolean]("banded.pruned")
+  /** (band, bkt) partitions a lookup scanned, and the layout's total —
+    * noted only under `Trace.auditing`: the counts force driver-side
+    * file listings that production lookups shouldn't pay twice.
+    */
+  val Partitions = graft.core.Trace.Key[(Int, Int)]("banded.partitions")
 }
 
 final case class BandedIndex(numBuckets: Int = 256,
     minBucketRows: Long = 1L << 16,
-    maxPrunedKeys: Int = 4096,
-    auditPartitions: Boolean = false) extends IncrementalDedup.IndexLayout {
+    maxPrunedKeys: Int = 4096) extends IncrementalDedup.IndexLayout {
   require(numBuckets > 0 && minBucketRows > 0 && maxPrunedKeys >= 0)
 
   private def stateRoot(root: String) = s"$root/state"
@@ -151,16 +158,6 @@ final case class BandedIndex(numBuckets: Int = 256,
       }
   }
 
-  /** (band, bkt) partition count the last candidate lookup scanned, and
-    * the layout's partition total — spec/audit side channel proving the
-    * pruning actually reached the physical plan. Populated only under
-    * `auditPartitions` (the counts force driver-side file listings that
-    * production lookups shouldn't pay twice).
-    */
-  @volatile var lastScannedPartitions: Int = -1
-  @volatile var lastTotalPartitions: Int = -1
-  @volatile var lastPruned: Boolean = false
-
   def committedTags(spark: SparkSession, root: String): Seq[String] =
     Warehouse.deltaVersions(spark, stateRoot(root)) match {
       case Seq() => Seq.empty
@@ -181,7 +178,8 @@ final case class BandedIndex(numBuckets: Int = 256,
     // small job; above the cap nothing large ever reaches the driver
     val keys = deliveryKeys.select(col("band").cast("int").as("band"),
       col("bh")).distinct().limit(maxPrunedKeys + 1).collect()
-    lastPruned = keys.length <= maxPrunedKeys
+    val pruned = keys.length <= maxPrunedKeys
+    graft.core.Trace.note(BandedIndex.Pruned, pruned)
     val bhs = keys.map(_.getLong(1)).distinct.toSeq
     val byBand = keys.groupBy(_.getInt(0))
     // one (band = b AND bkt IN (...)) disjunct per band, under the
@@ -243,15 +241,14 @@ final case class BandedIndex(numBuckets: Int = 256,
     }
     val side = gens.map { g =>
       val genPath = s"${bandsRoot(root)}/$g"
-      if (lastPruned) prunedScan(genPath, bucketsOf(g))
+      if (pruned) prunedScan(genPath, bucketsOf(g))
       else spark.read.schema(BandedIndex.BandsSchema).parquet(genPath)
     }.reduce(_.unionByName(_))
-    if (auditPartitions) {
-      lastScannedPartitions = Warehouse.partitionsRead(side)
-      lastTotalPartitions = Warehouse.partitionsRead(gens.map(g =>
-        spark.read.schema(BandedIndex.BandsSchema)
-          .parquet(s"${bandsRoot(root)}/$g")).reduce(_.unionByName(_)))
-    }
+    if (graft.core.Trace.auditing)
+      graft.core.Trace.note(BandedIndex.Partitions,
+        (Warehouse.partitionsRead(side), Warehouse.partitionsRead(gens.map(g =>
+          spark.read.schema(BandedIndex.BandsSchema)
+            .parquet(s"${bandsRoot(root)}/$g")).reduce(_.unionByName(_)))))
     side.select(col("id").as("id_a"), col("band"), col("bh"))
   }
 

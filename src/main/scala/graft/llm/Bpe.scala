@@ -597,12 +597,12 @@ object Bpe {
       numMerges, minCount, batchCap, viewSize, checkpointEvery,
       stateDir, persistEvery)
 
-  /** Pass count of the last scaled-training run (the `Dedup.lastCcRounds`
-    * evidence pattern): each pass is ONE count-table collect + ONE
-    * map-only rewrite + ONE delta aggregation over changed words, so
-    * passes ≪ merges is the measurable form of "per-merge cost far below
-    * one full-table aggregation per merge". */
-  @volatile var lastScaledPasses: Int = 0
+  /** Pass count of a scaled-training run, noted when it ends: each pass
+    * is ONE count-table collect + ONE map-only rewrite + ONE delta
+    * aggregation over changed words, so passes ≪ merges is the
+    * measurable form of "per-merge cost far below one full-table
+    * aggregation per merge". */
+  val ScaledPasses = graft.core.Trace.Key[Int]("bpe.scaled_passes")
 
   private def runScaledLoop(init: TrainState, numMerges: Int,
       minCount: Long, batchCap: Int, viewSize: Int, checkpointEvery: Int,
@@ -709,7 +709,7 @@ object Bpe {
       TrainState(words, counts, merges.toSeq, symbols.toSet, pass)))
     freeCheckpoint(lastWordsCp)
     freeCheckpoint(lastCountsCp)
-    lastScaledPasses = pass - init.pass
+    graft.core.Trace.note(ScaledPasses, pass - init.pass)
     merges.toSeq
   }
 

@@ -593,12 +593,12 @@ object Dedup {
     * misses a transitive pair: a chain a–b, b–c without the a–c pair
     * must still collapse to one survivor.
     */
-  /** Rounds the last [[duplicateClusters]] distributed loop took to
-    * converge (0 when the driver fast path or the empty path ran) —
-    * diagnostic state for the scale-curve's O(log diameter) evidence,
+  /** Rounds a [[duplicateClusters]] distributed loop took to converge,
+    * noted when the loop ends (the driver fast path and the empty path
+    * note nothing) — the scale curve's O(log diameter) evidence;
     * nothing in the engine reads it.
     */
-  @volatile var lastCcRounds: Int = 0
+  val CcRounds = graft.core.Trace.Key[Int]("dedup.cc_rounds")
 
   def duplicateClusters(pairs: DataFrame, maxIterations: Int = 20,
       driverMaxPairs: Long = 1000000L): DataFrame =
@@ -622,7 +622,6 @@ object Dedup {
     */
   def duplicateClustersLocal(pairs: DataFrame, maxIterations: Int = 20,
       driverMaxPairs: Long = 1000000L): Either[Array[(Long, Long)], DataFrame] = {
-    lastCcRounds = 0
     val slim = pairs.select("id_a", "id_b")
     // Small-pair fast path: the VERIFIED near-dup pair set is proportional
     // to the corpus's actual duplication, not its size — on most corpora
@@ -742,8 +741,8 @@ object Dedup {
       converged = changed.isEmpty
       labels = updated.drop("prev")
       iter += 1
-      lastCcRounds = iter
     }
+    graft.core.Trace.note(CcRounds, iter)
     edges.unpersist()
     // the final labels are checkpointed, so nothing reads the pair
     // checkpoint any more; the labels themselves are the caller's
@@ -799,21 +798,11 @@ object Dedup {
       textCol: String = "text", idCol: String = "doc_id"): DataFrame =
     dropClusterLosers(df, nearDupPairs(df, minJaccard, textCol, idCol), idCol)
 
-  /** Whether the last [[dropNearDupLosersBounded]] ON THIS THREAD ran
-    * the driver-local bounded path (diagnostic side channel, the
-    * `lastCcRounds` pattern — the equivalence spec asserts each path
-    * actually executed). THREAD-LOCAL, not a shared global: the
-    * forced-distributed gates require(!flag) right after building
-    * their plan on the same caller thread, and a shared @volatile
-    * could be clobbered by a concurrent gate construction between the
-    * decision and the require — turning the guard into a false RED or
-    * a silent pass.
+  /** Whether a [[dropNearDupLosersBounded]] call ran the driver-local
+    * bounded path, noted per call so the equivalence spec and the
+    * forced-distributed gates can check which path actually executed.
     */
-  private val _lastNearDupLocal = new ThreadLocal[Boolean] {
-    override def initialValue(): Boolean = false
-  }
-  def lastNearDupLocal: Boolean = _lastNearDupLocal.get()
-  def lastNearDupLocal_=(v: Boolean): Unit = _lastNearDupLocal.set(v)
+  val NearDupLocal = graft.core.Trace.Key[Boolean]("dedup.near_dup_local")
 
   /** Near-dup survivor filter over a PREPARED signature/shingle state
     * table (id, sig, arr) — the bounded-probe twin of the distributed
@@ -849,8 +838,9 @@ object Dedup {
     // massBytes = 0) would satisfy 0 <= 0 and take the local path,
     // turning an empty-but-valid input into a require() crash in the
     // forced-distributed gates
-    lastNearDupLocal = maxRows > 0 && n <= maxRows && massBytes <= maxBytes
-    if (!lastNearDupLocal) {
+    val local = maxRows > 0 && n <= maxRows && massBytes <= maxBytes
+    graft.core.Trace.note(NearDupLocal, local)
+    if (!local) {
       val pairs = verifyJaccardFromShingles(
         // persistInput = false: state is the caller's prepared (and by
         // contract persisted) table; its (id, sig) projection reads

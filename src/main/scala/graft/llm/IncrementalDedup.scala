@@ -139,28 +139,13 @@ object IncrementalDedup {
     }
   }
 
-  /** Plan-audit side channel (the `Dedup.lastCcRounds` pattern): the
-    * physical shapes of the last [[addDelivery]]'s imperative stages,
-    * recorded at materialization time so `graft.Explain` (→ PLANS.md)
-    * can audit what actually shuffles — the top-level gate plan only
-    * shows the post-admission read of the committed generation.
+  /** Whether an [[addDelivery]] admission ran the driver-local bounded
+    * path (vs the distributed join pipeline), noted once per admission
+    * so the equivalence spec and the forced-distributed gate can check
+    * which path actually executed. Nothing in the engine reads it.
     */
-  @volatile var lastStagePlans: Seq[graft.core.PlanAudit.Stage] = Nil
-
-  /** Whether the last [[addDelivery]] admission ON THIS THREAD ran the
-    * driver-local bounded path (vs the distributed join pipeline) —
-    * diagnostic side channel (the `Dedup.lastCcRounds` pattern) so the
-    * equivalence spec can assert each path actually executed. Nothing
-    * in the engine reads it. THREAD-LOCAL, not a shared global: the
-    * forced-distributed gate's require(!flag) runs on the same caller
-    * thread as the addDelivery that set it, and a shared @volatile
-    * could be clobbered by a concurrent caller between the two.
-    */
-  private val _lastAdmissionLocal = new ThreadLocal[Boolean] {
-    override def initialValue(): Boolean = false
-  }
-  def lastAdmissionLocal: Boolean = _lastAdmissionLocal.get()
-  def lastAdmissionLocal_=(v: Boolean): Unit = _lastAdmissionLocal.set(v)
+  val AdmissionLocal =
+    graft.core.Trace.Key[Boolean]("incremental_dedup.admission_local")
 
   // -------------------------------------------------------------------
   // Monotone-id bound: the max id ever admitted, kept as an O(1)
@@ -313,10 +298,6 @@ object IncrementalDedup {
         if (readIdBound(spark, indexRoot).forall(_ < m))
           writeIdBound(spark, indexRoot, m)
       }
-      // no admission ran — clear any stale path flag (the empty-delivery
-      // rule) so a forced-distributed caller's require can't trip on a
-      // replayed trigger
-      lastAdmissionLocal = false
       return delivery.limit(0)
     }
     val hasIndex = layout.hasIndex(spark, indexRoot)
@@ -352,11 +333,6 @@ object IncrementalDedup {
       // tag commit — re-running an empty delivery is a no-op either
       // way, so exactly-once needs no marker (and streaming callers
       // save the per-trigger isEmpty probe job by just calling in).
-      // No admission ran at all, so the path flag must not carry a
-      // STALE true from a previous call — a forced-distributed gate's
-      // require(!lastAdmissionLocal) on an empty delivery would
-      // otherwise crash on leftover state.
-      lastAdmissionLocal = false
       batch.unpersist()
       return delivery.limit(0)
     }
@@ -575,15 +551,12 @@ object IncrementalDedup {
       val surv =
         if (losers.isEmpty) batch
         else batch.filter(!graft.expr.native.inLongSet(col("id"), losers))
-      if (graft.core.PlanAudit.enabled) {
-        val probes = Seq(Option(candProbe).map(df =>
-            graft.core.PlanAudit.stage(s"d$ord:candidates", df)),
-          Option(verifyFetch).map(df =>
-            graft.core.PlanAudit.stage(s"d$ord:verify", df))).flatten
-        lastStagePlans = lastStagePlans ++
-          (graft.core.PlanAudit.stage(s"d$ord:delivery_state", batch) +:
-            probes) :+ graft.core.PlanAudit.stage(s"d$ord:admission", surv)
-      }
+      if (graft.core.Trace.auditing)
+        graft.core.PlanAudit.noteStages(
+          Seq(s"d$ord:delivery_state" -> batch) ++
+            Option(candProbe).map(s"d$ord:candidates" -> _) ++
+            Option(verifyFetch).map(s"d$ord:verify" -> _) :+
+            (s"d$ord:admission" -> surv))
       Some(surv)
     }
 
@@ -591,7 +564,7 @@ object IncrementalDedup {
       if (nDocs <= DriverAdmissionBound &&
           stateBytesEst <= driverAdmissionMaxBytes) driverAdmit()
       else None
-    lastAdmissionLocal = driverSurvivors.isDefined
+    graft.core.Trace.note(AdmissionLocal, driverSurvivors.isDefined)
 
     // within-delivery candidates: banded LSH over the (small) delivery
     // persistInput = false: sigView is a projection of the persisted
@@ -690,16 +663,14 @@ object IncrementalDedup {
         // one delta generation per delivery: append cost ∝ delivery
         batch.join(admitted, Seq("id"), "left_semi")
     })
-    // stage capture only when someone is reading the audit (Explain →
-    // PLANS.md): each row renders a full physical plan. The driver-local
-    // path records its own rows (its distributed fragments are the two
-    // index probes, not these join pipelines).
-    if (graft.core.PlanAudit.enabled && driverSurvivors.isEmpty)
-      lastStagePlans = lastStagePlans ++ Seq(
-        graft.core.PlanAudit.stage(s"d$ord:delivery_state", batch),
-        graft.core.PlanAudit.stage(s"d$ord:candidates", pairs),
-        graft.core.PlanAudit.stage(s"d$ord:verify", verified),
-        graft.core.PlanAudit.stage(s"d$ord:admission", survivors))
+    // stage rows only under an audit (Explain → PLANS.md): each row
+    // renders a full physical plan. The driver-local path notes its own
+    // rows (its distributed fragments are the two index probes, not
+    // these join pipelines).
+    if (graft.core.Trace.auditing && driverSurvivors.isEmpty)
+      graft.core.PlanAudit.noteStages(Seq(s"d$ord:delivery_state" -> batch,
+        s"d$ord:candidates" -> pairs, s"d$ord:verify" -> verified,
+        s"d$ord:admission" -> survivors))
     // replay-guarded when tagged: the committed-tag check at the top
     // already returned, so a tag commits exactly once
     val genPath = layout.append(survivors, indexRoot, bands, rowsPerBand,

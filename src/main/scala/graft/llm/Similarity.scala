@@ -860,12 +860,12 @@ object Similarity {
       .sorted
     val scan = Staged.read(spark, indexPath)
       .filter(col("cid").isin(cells.map(Int.box).toIndexedSeq: _*))
-    // plan self-assert behind the audit toggle (the BandedIndex
-    // auditPartitions rule): partitionsRead forces an extra planning
-    // pass + partition listing per lookup, which a production search
+    // plan self-assert under an audit only (the BandedIndex partition
+    // counts rule): partitionsRead forces an extra planning pass +
+    // partition listing per lookup, which a production search
     // shouldn't pay twice. The pruning contract itself stays pinned
     // independently by ScaleOpsSpec's partitionsRead assertions.
-    if (graft.core.PlanAudit.enabled)
+    if (graft.core.Trace.auditing)
       require(graft.sources.Warehouse.partitionsRead(scan) <= cells.length,
         s"IVF index scan read more than the ${cells.length} probed cells — " +
           "is the index hive-partitioned by cid?")
@@ -1404,7 +1404,7 @@ object Similarity {
     // ONE probedScan for the whole search: the sweep reuses the same
     // (probes, scan) pair the rerank reads vectors from — calling the
     // public ivfPqAdcSweep here would run the probe-cell collect (and,
-    // under PlanAudit, the partition-listing assert) a second time
+    // under an audit, the partition-listing assert) a second time
     val (probes, scan) = probedScan(spark, indexPath, qBase, quantizer, nProbe)
     val candidates = adcCandidateCut(
       adcSweepFrom(probes, scan, codebooks, idCol), rerank)

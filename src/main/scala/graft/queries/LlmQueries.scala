@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Staged
+import graft.core.{Staged, Trace}
 import graft.functions.roundDet
 import graft.llm.{Dedup, IncrementalDedup, Sampling, Similarity, TextAnalysis}
 import graft.sources.Tables
@@ -1313,15 +1313,15 @@ object LlmQueries {
     // 100 TB plan silently regresses; the require turns a fast-path
     // sneak-in into a RED row.
     "x_curation_pipeline_dist" -> ((s, dir) => {
-      val out = curationGate(
+      val (out, notes) = Trace.capture(curationGate(
         docs(s, dir).select(col("doc_id"), col("text"))
           .filter(col("doc_id") % 4 === 3),
         graft.llm.CurationPipeline.Config(
           minQuality = 0.1, nearDupJaccard = 1.0,
-          nearDupMaxRows = 0L, nearDupMaxBytes = 0L))
+          nearDupMaxRows = 0L, nearDupMaxBytes = 0L)))
       // the ceiling probe runs while curate() builds the plan, so the
-      // flag is already decided here — no materialization needed
-      require(!graft.llm.Dedup.lastNearDupLocal,
+      // path is already decided here — no materialization needed
+      require(notes.last(Dedup.NearDupLocal).contains(false),
         "distributed-near-dup gate must take the distributed path")
       out
     }),
@@ -1494,9 +1494,9 @@ object LlmQueries {
         ()
       }
       val root = cloneIndex(s, base, "x_incremental_dedup_dist")
-      IncrementalDedup.addDelivery(delivery2, root, minJaccard = 1.0,
-        driverAdmissionMaxBytes = 0L)
-      require(!IncrementalDedup.lastAdmissionLocal,
+      val (_, notes) = Trace.capture(IncrementalDedup.addDelivery(
+        delivery2, root, minJaccard = 1.0, driverAdmissionMaxBytes = 0L))
+      require(notes.last(IncrementalDedup.AdmissionLocal).contains(false),
         "distributed-admission gate must take the distributed path")
       IncrementalDedup.indexIds(s, root).select(col("id").as("doc_id"))
     }),
@@ -1550,9 +1550,9 @@ object LlmQueries {
         ()
       }
       val root = cloneIndex(s, base, "x_incremental_dedup_pruned")
-      IncrementalDedup.addDelivery(micro, root, minJaccard = 1.0,
-        layout = layout)
-      require(layout.lastPruned,
+      val (_, notes) = Trace.capture(IncrementalDedup.addDelivery(
+        micro, root, minJaccard = 1.0, layout = layout))
+      require(notes.last(graft.llm.BandedIndex.Pruned).contains(true),
         "micro delivery must take the pruned lookup path")
       layout.indexIds(s, root).select(col("id").as("doc_id"))
     }),

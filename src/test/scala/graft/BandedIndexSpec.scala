@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Trace
 import graft.llm.{BandedIndex, IncrementalDedup}
 import graft.sources.Warehouse
 
@@ -49,24 +50,23 @@ class BandedIndexSpec extends SparkSpec {
   test("small delivery prunes the bands scan to its own partitions") {
     // minBucketRows = 1 forces the full 32-bucket fan-out at spec scale
     // (the adaptive sizing would write one bucket for 300 docs)
-    val layout = BandedIndex(numBuckets = 32, minBucketRows = 1L,
-      auditPartitions = true)
+    val layout = BandedIndex(numBuckets = 32, minBucketRows = 1L)
     val root = tmpDir("band-prune")
     IncrementalDedup.addDelivery(corpus(0 until 300), root,
       minJaccard = 1.0, layout = layout)
     // 4 docs × 8 bands = ≤32 band keys → ≤32 of ~256 (band, bkt) dirs
     val small = corpus(5000 until 5002)
       .union(twin(corpus(7 until 9), 9000L)) // dups of survivors 7, 8
-    val admitted = IncrementalDedup.addDelivery(small, root,
-      minJaccard = 1.0, layout = layout)
-    assert(layout.lastPruned, "under-cap delivery must take the pruned path")
-    assert(layout.lastScannedPartitions >= 0 &&
-      layout.lastScannedPartitions <= 32,
-      s"scanned ${layout.lastScannedPartitions} dirs; a 4-doc delivery " +
-        "holds at most 32 band keys")
-    assert(layout.lastTotalPartitions >= 200,
-      s"index should spread over most of the 256 dirs, saw " +
-        s"${layout.lastTotalPartitions}")
+    val (admitted, notes) = Trace.audit(IncrementalDedup.addDelivery(small,
+      root, minJaccard = 1.0, layout = layout))
+    assert(notes.last(BandedIndex.Pruned).contains(true),
+      "under-cap delivery must take the pruned path")
+    val (scanned, total) =
+      notes.last(BandedIndex.Partitions).getOrElse((-1, -1))
+    assert(scanned >= 0 && scanned <= 32,
+      s"scanned $scanned dirs; a 4-doc delivery holds at most 32 band keys")
+    assert(total >= 200,
+      s"index should spread over most of the 256 dirs, saw $total")
     assert(ids(admitted) == Seq(5000L, 5001L),
       "pruned lookup must still see the colliding index rows")
     // sizing is per generation: 300 docs fan out to all 32 buckets,
@@ -84,8 +84,7 @@ class BandedIndexSpec extends SparkSpec {
     val micro = corpus(5000 until 5002)
       .union(twin(corpus(3 until 5), 9000L)) // dups of survivors 3, 4
     def run(compactBetween: Boolean): (Seq[Long], Seq[Long], Int) = {
-      val layout = BandedIndex(numBuckets = 32, minBucketRows = 1L,
-        auditPartitions = true)
+      val layout = BandedIndex(numBuckets = 32, minBucketRows = 1L)
       val root = tmpDir(s"band-compact-$compactBetween")
       IncrementalDedup.addDelivery(d1, root, minJaccard = 1.0,
         layout = layout, deliveryTag = Some("t1"))
@@ -104,11 +103,12 @@ class BandedIndexSpec extends SparkSpec {
         assert(bandGens.head.endsWith(".b32"),
           s"snapshot twin lost the adaptive fan-out: $bandGens")
       }
-      val admitted = IncrementalDedup.addDelivery(micro, root,
-        minJaccard = 1.0, layout = layout)
-      assert(layout.lastPruned, "micro lookup must stay pruned")
+      val (admitted, notes) = Trace.audit(IncrementalDedup.addDelivery(
+        micro, root, minJaccard = 1.0, layout = layout))
+      assert(notes.last(BandedIndex.Pruned).contains(true),
+        "micro lookup must stay pruned")
       (ids(admitted), ids(layout.indexIds(spark, root), "id"),
-        layout.lastScannedPartitions)
+        notes.last(BandedIndex.Partitions).fold(-1)(_._1))
     }
     val (admPlain, idxPlain, scanPlain) = run(compactBetween = false)
     val (admFolded, idxFolded, scanFolded) = run(compactBetween = true)
@@ -161,9 +161,10 @@ class BandedIndexSpec extends SparkSpec {
       .select(col("bk.band").as("band"), col("bk.bh").as("bh"))
       .persist()
     keys.count()
-    val direct = layout.candidateSide(spark, root, keys, 8, 4)
-      .collect().map(_.toString).sorted.toSeq
-    assert(layout.lastPruned)
+    val (side, notes) = Trace.capture(
+      layout.candidateSide(spark, root, keys, 8, 4))
+    val direct = side.collect().map(_.toString).sorted.toSeq
+    assert(notes.last(BandedIndex.Pruned).contains(true))
     // reference: whole bands table, joined on the same key set
     val allBands = Warehouse.deltaRead(spark, s"$root/bands")
       .select(col("id").as("id_a"), col("band").cast("int").as("band"),
@@ -193,9 +194,10 @@ class BandedIndexSpec extends SparkSpec {
     IncrementalDedup.addDelivery(corpus(0 until 80), root,
       minJaccard = 1.0, layout = layout)
     val d2 = corpus(500 until 520).union(twin(corpus(3 until 5), 9000L))
-    val admitted = IncrementalDedup.addDelivery(d2, root,
-      minJaccard = 1.0, layout = layout)
-    assert(!layout.lastPruned, "22 docs × 8 bands ≫ cap 8 must full-scan")
+    val (admitted, notes) = Trace.capture(IncrementalDedup.addDelivery(d2,
+      root, minJaccard = 1.0, layout = layout))
+    assert(notes.last(BandedIndex.Pruned).contains(false),
+      "22 docs × 8 bands ≫ cap 8 must full-scan")
     assert(ids(admitted) == (500L until 520L))
   }
 

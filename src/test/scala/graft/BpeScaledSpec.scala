@@ -50,14 +50,16 @@ class BpeScaledSpec extends SparkSpec {
       .select(Bpe.charSymbols(col("word")).as("syms"), col("freq"))
       .as[(Seq[String], Long)].collect().toSeq
     val expected = refOf(collected, 160, 2L)
-    val scaled = Bpe.trainScaledWords(wordsDf(collected), numMerges = 160,
-      minCount = 2L, batchCap = 16, viewSize = 64, checkpointEvery = 5)
+    val (scaled, notes) = graft.core.Trace.capture(
+      Bpe.trainScaledWords(wordsDf(collected), numMerges = 160,
+        minCount = 2L, batchCap = 16, viewSize = 64, checkpointEvery = 5))
     assert(scaled == expected)
     // the scale claim, measured: 160 merges must NOT cost 160 passes —
     // each pass is one count-collect + one map-only rewrite + one
     // changed-words delta agg, and batching amortizes merges per pass
-    assert(Bpe.lastScaledPasses <= 80,
-      s"160 merges took ${Bpe.lastScaledPasses} passes — batching broke")
+    val passes = notes.last(Bpe.ScaledPasses)
+    assert(passes.exists(_ <= 80),
+      s"160 merges took $passes passes — batching broke")
   }
 
   test("trainScaledWords survives chained and colliding merges") {

@@ -355,6 +355,19 @@ class ContractSpec extends SparkSpec {
       s"commit through AtomicFiles.publish instead: ${offenders.mkString(", ")}")
   }
 
+  // Diagnostics reach their readers through graft.core.Trace captures
+  // alone; a process-global @volatile var or a ThreadLocal holder is a
+  // side channel that a concurrent caller can clobber and that no
+  // reader can scope to its own call.
+  test("diagnostics are noted through graft.core.Trace only") {
+    val found = Seq("core", "dbt", "llm", "queries", "sources").map(d =>
+      sourcesContaining(s"src/main/scala/graft/$d",
+        Seq("@volatile", "ThreadLocal")))
+    val offenders = found.flatMap(_._2).filterNot(_.startsWith("Trace.scala:"))
+    assert(found.forall(_._1.nonEmpty) && offenders.isEmpty,
+      s"note through graft.core.Trace instead: ${offenders.mkString(", ")}")
+  }
+
   /** The `.scala` files directly under `dir`, and "file: word" for each
     * of `words` one of them contains.
     */

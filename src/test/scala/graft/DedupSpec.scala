@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.core.Trace
 import graft.llm.{Dedup, TextAnalysis}
 
 /** Dedup operators on planted exact/near/unrelated duplicates. */
@@ -108,14 +109,15 @@ class DedupSpec extends SparkSpec {
     // driverMaxPairs = 0 forces the distributed loop — the path this
     // test exists to pin (the fast path has no round cap to blow)
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val labels = Dedup.duplicateClusters(chain, maxIterations = 20,
-        driverMaxPairs = 0L)
+    val (labels, notes) = Trace.capture(Dedup.duplicateClusters(chain,
+      maxIterations = 20, driverMaxPairs = 0L))
+    val rounds = notes.last(Dedup.CcRounds).getOrElse(0)
     // the loop frees its pair checkpoint and every superseded round's
     // labels itself; only the returned labels' checkpoint stays, the
     // caller's to free
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).size == 1,
-      s"rounds: ${Dedup.lastCcRounds}")
-    assert(Dedup.lastCcRounds > 1)
+      s"rounds: $rounds")
+    assert(rounds > 1)
     val clusters =
       try labels.collect().map(r => r.getLong(0) -> r.getLong(1))
       finally graft.core.CacheUtil.freeCheckpoint(labels)
@@ -270,13 +272,17 @@ class DedupSpec extends SparkSpec {
     // distributed `0.0 >= 0.0` filter kept
     for (minJ <- Seq(0.0, 0.5, 0.8, 1.0)) {
       val st = stateOf(corpus)
-      val local = Dedup.dropNearDupLosersBounded(corpus, st, minJ)
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      assert(Dedup.lastNearDupLocal, s"bounded corpus must take the local path (minJ=$minJ)")
-      val dist = Dedup.dropNearDupLosersBounded(corpus, st, minJ,
-        maxRows = 1) // force the distributed fallback
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      assert(!Dedup.lastNearDupLocal, "maxRows=1 must force the distributed path")
+      val (local, localNotes) = Trace.capture(
+        Dedup.dropNearDupLosersBounded(corpus, st, minJ)
+          .select("doc_id").collect().map(_.getLong(0)).toSet)
+      assert(localNotes.last(Dedup.NearDupLocal).contains(true),
+        s"bounded corpus must take the local path (minJ=$minJ)")
+      val (dist, distNotes) = Trace.capture(
+        Dedup.dropNearDupLosersBounded(corpus, st, minJ,
+          maxRows = 1) // force the distributed fallback
+          .select("doc_id").collect().map(_.getLong(0)).toSet)
+      assert(distNotes.last(Dedup.NearDupLocal).contains(false),
+        "maxRows=1 must force the distributed path")
       assert(local == dist, s"survivor sets diverge at minJaccard=$minJ: " +
         s"local=$local distributed=$dist")
       if (minJ > 0.0)
@@ -295,8 +301,9 @@ class DedupSpec extends SparkSpec {
     val st = corpus.select(col("doc_id").as("id"),
         Dedup.shingles(TextAnalysis.tokens(col("text")), 3).as("arr"))
       .withColumn("sig", Dedup.minhashSignature(col("arr"), 32))
-    val out = Dedup.dropNearDupLosersBounded(corpus, st, 1.0, maxRows = 0)
-    assert(!Dedup.lastNearDupLocal,
+    val (out, notes) = Trace.capture(
+      Dedup.dropNearDupLosersBounded(corpus, st, 1.0, maxRows = 0))
+    assert(notes.last(Dedup.NearDupLocal).contains(false),
       "ceiling 0 must force the distributed path even on an empty state")
     assert(out.count() == 0)
   }

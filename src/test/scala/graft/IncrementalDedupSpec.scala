@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Trace
 import graft.llm.{Dedup, IncrementalDedup}
 import graft.sources.Warehouse
 
@@ -120,12 +121,12 @@ class IncrementalDedupSpec extends SparkSpec {
     // recovery replays the last micro-batch with the same tag: the
     // committed-tag guard skips re-admission (exactly-once) AND
     // re-ratchets the bound from the replayed delivery
-    val replayed = IncrementalDedup.addDelivery(d2, root,
-      deliveryTag = Some("t2"))
+    val (replayed, notes) = Trace.capture(IncrementalDedup.addDelivery(d2,
+      root, deliveryTag = Some("t2")))
     assert(replayed.count() == 0, "replayed tag must admit nothing")
-    assert(!IncrementalDedup.lastAdmissionLocal,
-      "a replayed trigger ran no admission — the path flag must clear " +
-        "(a forced-distributed caller's require would trip on stale state)")
+    assert(!notes.last(IncrementalDedup.AdmissionLocal).contains(true),
+      "a replayed trigger ran no admission — it must not report the " +
+        "local path (a forced-distributed caller's require would trip)")
     val healed = scala.io.Source.fromInputStream(fs.open(p), "UTF-8")
       .mkString.trim.toLong
     assert(healed == 15L, s"bound not re-ratcheted on replay: $healed")
@@ -173,18 +174,19 @@ class IncrementalDedupSpec extends SparkSpec {
   }
 
   test("an empty delivery resets the admission-path flag") {
-    // the empty-delivery early return runs NO admission; the flag must
-    // not carry a stale true from a previous call, or a
-    // forced-distributed gate's require(!lastAdmissionLocal) would
-    // crash on an empty-but-valid trigger
+    // the empty-delivery early return runs NO admission; it must not
+    // report the local path, or a forced-distributed gate's require
+    // would crash on an empty-but-valid trigger
     val root = tmpDir("incr-dedup-empty")
-    IncrementalDedup.addDelivery(d1, root, minJaccard = 1.0)
-    assert(IncrementalDedup.lastAdmissionLocal,
+    val (_, first) = Trace.capture(
+      IncrementalDedup.addDelivery(d1, root, minJaccard = 1.0))
+    assert(first.last(IncrementalDedup.AdmissionLocal).contains(true),
       "bounded delivery should have taken the local path")
-    val out = IncrementalDedup.addDelivery(d1.limit(0), root, minJaccard = 1.0)
+    val (out, notes) = Trace.capture(
+      IncrementalDedup.addDelivery(d1.limit(0), root, minJaccard = 1.0))
     assert(out.count() == 0)
-    assert(!IncrementalDedup.lastAdmissionLocal,
-      "empty delivery must clear the stale local-path flag")
+    assert(!notes.last(IncrementalDedup.AdmissionLocal).contains(true),
+      "empty delivery must not report the local path")
   }
 
   test("driver-local admission ≡ distributed admission (both layouts, " +
@@ -221,14 +223,14 @@ class IncrementalDedupSpec extends SparkSpec {
         if (banded) graft.llm.BandedIndex() else IncrementalDedup.FlatIndex
       val rootL = tmpDir(s"adm-local-$minJ-$banded")
       val rootD = tmpDir(s"adm-dist-$minJ-$banded")
-      val l1 = ids(IncrementalDedup.addDelivery(wave1, rootL,
-        minJaccard = minJ, layout = layout()))
-      assert(IncrementalDedup.lastAdmissionLocal,
+      val (l1, localNotes) = Trace.capture(ids(IncrementalDedup.addDelivery(
+        wave1, rootL, minJaccard = minJ, layout = layout())))
+      assert(localNotes.last(IncrementalDedup.AdmissionLocal).contains(true),
         "bounded wave must take the driver-local path")
-      val d1 = ids(IncrementalDedup.addDelivery(wave1, rootD,
-        minJaccard = minJ, layout = layout(),
-        driverAdmissionMaxBytes = 0L))
-      assert(!IncrementalDedup.lastAdmissionLocal,
+      val (d1, distNotes) = Trace.capture(ids(IncrementalDedup.addDelivery(
+        wave1, rootD, minJaccard = minJ, layout = layout(),
+        driverAdmissionMaxBytes = 0L)))
+      assert(distNotes.last(IncrementalDedup.AdmissionLocal).contains(false),
         "zero ceiling must force the distributed path")
       assert(l1 == d1, s"wave-1 admission diverged (minJ=$minJ banded=$banded)")
       val l2 = ids(IncrementalDedup.addDelivery(wave2, rootL,

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, rng}
 
+import graft.core.Trace
 import graft.functions._
 
 /** Property tests for the BigQuery↔Spark semantic-drift risks
@@ -402,12 +403,16 @@ class PropertySpec extends SparkSpec {
       val st = corpus.select(col("doc_id").as("id"),
           Dedup.shingles(TextAnalysis.tokens(col("text")), 3).as("arr"))
         .withColumn("sig", Dedup.minhashSignature(col("arr"), 32))
-      val local = Dedup.dropNearDupLosersBounded(corpus, st, minJ)
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      assert(Dedup.lastNearDupLocal, s"case $i: expected the local path")
-      val dist = Dedup.dropNearDupLosersBounded(corpus, st, minJ, maxRows = 0)
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      assert(!Dedup.lastNearDupLocal, s"case $i: expected the distributed path")
+      val (local, localNotes) = Trace.capture(
+        Dedup.dropNearDupLosersBounded(corpus, st, minJ)
+          .select("doc_id").collect().map(_.getLong(0)).toSet)
+      assert(localNotes.last(Dedup.NearDupLocal).contains(true),
+        s"case $i: expected the local path")
+      val (dist, distNotes) = Trace.capture(
+        Dedup.dropNearDupLosersBounded(corpus, st, minJ, maxRows = 0)
+          .select("doc_id").collect().map(_.getLong(0)).toSet)
+      assert(distNotes.last(Dedup.NearDupLocal).contains(false),
+        s"case $i: expected the distributed path")
       assert(local == dist,
         s"case $i (minJ=$minJ): local=$local dist=$dist corpus=$docsSeq")
     }
@@ -434,8 +439,9 @@ class PropertySpec extends SparkSpec {
             minJaccard = minJ, layout = layout(),
             driverAdmissionMaxBytes = if (dist) 0L else 64L << 20)
             .select(col("doc_id")).collect().map(_.getLong(0)).sorted.toSeq
-        val a1 = admit(w1); val a2 = admit(w2)
-        assert(IncrementalDedup.lastAdmissionLocal != dist,
+        val a1 = admit(w1)
+        val (a2, notes) = Trace.capture(admit(w2))
+        assert(notes.last(IncrementalDedup.AdmissionLocal).contains(!dist),
           s"case $i: wrong admission path (dist=$dist)")
         (a1, a2)
       }
