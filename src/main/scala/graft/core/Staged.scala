@@ -94,7 +94,11 @@ object Staged {
   private val SchemaMax = 512
   private val schemas =
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()
-  private def pin(path: String, schema: StructType): Unit = {
+  /** Pin `schema` as the layout of `path`, so the next [[read]] runs no
+    * inference job. Only the writer that just wrote `path` under
+    * exactly `schema` calls this.
+    */
+  def pin(path: String, schema: StructType): Unit = {
     if (schemas.size() > SchemaMax) schemas.clear()
     schemas.put(path, schema)
     ()

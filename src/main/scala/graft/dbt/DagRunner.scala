@@ -1,12 +1,24 @@
 package graft.dbt
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{CurrentDate, CurrentTime,
+  CurrentTimestampLike, Expression, Literal, UserDefinedExpression,
+  UserDefinedGenerator}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, ObjectConsumer,
+  ObjectProducer, TypedFilter}
+import org.apache.spark.sql.execution.aggregate.TypedAggregateExpression
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.ObjectType
 
-import graft.core.AtomicFiles
+import graft.core.{AtomicFiles, Staged}
 import graft.core.AtomicFiles.Replace
 
 /** Model registry + DAG executor: the Spark-native replacement for dbt's
@@ -64,6 +76,32 @@ final class ModelRegistry {
   * first, so a model that fails at execution leaves its previous table
   * readable and the next run starts clean.
   *
+  * A published unpartitioned table is read back, and read as an
+  * incremental model's `{{ this }}`, under the schema the runner wrote,
+  * so no read runs a footer-inference job. A partitioned table is
+  * inferred on every read: partition-value type inference can differ
+  * from the written type. So is a table whose files changed since this
+  * JVM last published it (a rewrite outside the runner).
+  *
+  * Unchanged models are skipped. A persisted model that is not a
+  * snapshot has a skip key: a digest of its canonicalized analyzed plan
+  * rendered in full, its output schema and materialization, the
+  * session's SQL conf, and for each file leaf its format, options,
+  * schema and sorted (path, length, mtime) list. `EngineConfig` enters
+  * through the plan: `today` and every `env` value a model uses become
+  * literals or file leaves of its plan, so changing one re-runs just
+  * the models that read it. When the key equals the one recorded at
+  * the table's last publish and the table still holds the files that
+  * publish left, the run reads the table back and starts no job;
+  * downstream models then see unchanged files and skip too. Keys are
+  * recorded per JVM: a new JVM rebuilds every model once. A model never
+  * skips under `fullRefresh`, when it is a snapshot, when its plan has a
+  * leaf that is not a file scan (an RDD, a `LocalRelation`, a cache or a
+  * stream), or when its plan has a UDF or typed closure, a
+  * non-deterministic expression or a current-time expression. An
+  * incremental model reads its own table, which its last publish
+  * changed, so it re-runs on every run.
+  *
   * @param sources   (sourceName, tableName) → raw relation (S1/S2)
   * @param warehouse dir for Table/Incremental/Snapshot parquet; layout is
   *                  `<warehouse>/<model>` — at cluster scale point this at
@@ -76,13 +114,37 @@ final class DagRunner(
     warehouse: String,
     config: EngineConfig = EngineConfig()) {
 
+  import DagRunner._
+
   private val built = mutable.LinkedHashMap.empty[String, DataFrame]
 
   private def path(name: String) = s"$warehouse/$name"
 
-  private def exists(name: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path(name))
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+  private lazy val fs =
+    new Path(warehouse).getFileSystem(spark.sessionState.newHadoopConf())
+
+  /** Every file under model `name`'s table dir, sorted; empty when it
+    * has no table.
+    */
+  private def committedFiles(name: String): Seq[FileId] = {
+    val p = new Path(path(name))
+    val out = mutable.ArrayBuffer.empty[FileId]
+    if (fs.exists(p)) {
+      val it = fs.listFiles(p, true)
+      while (it.hasNext) {
+        val f = it.next()
+        out += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+    }
+    out.sorted.toSeq
+  }
+
+  /** Model `name`'s table: under its pinned schema when `pinned`, else
+    * under the schema its footers give (pinned for the next read).
+    */
+  private def read(name: String, pinned: Boolean): DataFrame = {
+    if (!pinned) Staged.forget(path(name))
+    Staged.read(spark, path(name))
   }
 
   def resolve(name: String): DataFrame =
@@ -108,10 +170,20 @@ final class DagRunner(
 
     for (name <- registry.topoOrder if wanted(name)) {
       val m = registry(name)
+      val (persisted, parts) = m.materialization match {
+        case Materialization.Ephemeral | Materialization.View => (false, Nil)
+        case i: Materialization.Incremental => (true, i.partitionBy)
+        case _ => (true, Nil)
+      }
+      val table = if (persisted) committedFiles(name) else Nil
+      val last = if (table.isEmpty) None else Option(published.get(path(name)))
+      // the table holds what this JVM's last publish of it left
+      val intact = last.exists(_.files == table)
+      def existing() = read(name, pinned = intact && parts.isEmpty)
       val selfRaw =
         if (!fullRefresh &&
           m.materialization.isInstanceOf[Materialization.Incremental] &&
-          exists(name)) Some(spark.read.parquet(path(name)))
+          table.nonEmpty) Some(existing())
         else None
       // scanPredicate scopes every read of the existing table — the
       // model's own `{{ this }}` NOT-IN as well as the runner's key
@@ -124,21 +196,25 @@ final class DagRunner(
       }
       val ctx = ModelContext(spark, config, sources, resolve, self)
       val df = m.build(ctx)
+      val key =
+        if (!persisted ||
+          m.materialization.isInstanceOf[Materialization.Snapshot]) None
+        else skipKey(m, df)
 
       val materialized = m.materialization match {
+        case _ if !fullRefresh && key.isDefined && intact &&
+            last.exists(_.key == key) => existing()
         case Materialization.Ephemeral => df
         case Materialization.View =>
           df.createOrReplaceTempView(name); df
         case Materialization.Table =>
-          publish(name, df, Replace.Whole)
-        case Materialization.Snapshot(key, updatedAt) =>
-          val existing =
-            if (!fullRefresh && exists(name))
-              Some(spark.read.parquet(path(name)))
-            else None
-          publish(name, Snapshots.applyBatch(existing, df, key, updatedAt),
-            Replace.Whole)
-        case Materialization.Incremental(keys, _, parts, strategy) =>
+          publish(name, df, Replace.Whole, key)
+        case Materialization.Snapshot(uniqueKey, updatedAt) =>
+          val prior =
+            if (!fullRefresh && table.nonEmpty) Some(existing()) else None
+          publish(name, Snapshots.applyBatch(prior, df, uniqueKey, updatedAt),
+            Replace.Whole, None)
+        case Materialization.Incremental(keys, _, _, strategy) =>
           val (rows, replace) = selfRaw match {
             case None => (df, Replace.Whole)
             case Some(existingFull)
@@ -152,7 +228,7 @@ final class DagRunner(
               (df.join(self.get.select(keys.map(col): _*), keys, "left_anti"),
                 Replace.Append)
           }
-          publish(name, rows, replace, parts)
+          publish(name, rows, replace, key, parts)
       }
       built(name) = materialized
 
@@ -167,16 +243,19 @@ final class DagRunner(
     built.toMap
   }
 
-  /** Write `rows` as model `name`'s table, replacing `replace` of it, and
-    * return the committed table.
+  /** Write `rows` as model `name`'s table, replacing `replace` of it,
+    * record `key` with the committed files, and return the committed
+    * table.
     */
   private def publish(name: String, rows: DataFrame, replace: Replace,
-      parts: Seq[String] = Nil): DataFrame = {
+      key: Option[String], parts: Seq[String] = Nil): DataFrame = {
     AtomicFiles.publish(spark, path(name), replace) { staging =>
       val w = rows.write
       (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(staging)
     }
-    spark.read.parquet(path(name))
+    if (parts.isEmpty) Staged.pin(path(name), rows.schema)
+    record(path(name), Published(key, committedFiles(name)))
+    read(name, pinned = parts.isEmpty)
   }
 
   /** MERGE/upsert: batch rows replace same-key rows. Only the partitions
@@ -221,4 +300,91 @@ final class DagRunner(
         Replace.Partitions(dirs))
     }
   }
+
+  /** The skip key of persisted model `m` built as `df` (see the class
+    * doc), or None when `df`'s rows are not a function of what the key
+    * covers.
+    */
+  private def skipKey(m: Model, df: DataFrame): Option[String] = try {
+    val plan = df.queryExecution.withCachedData
+    val nodes = (plan +: plan.subqueriesAll).flatMap(_.collect { case n => n })
+    val leaves = nodes.collect { case l: LeafNode => fileLeaf(l) }
+    val opaque = nodes.exists {
+      case _: ObjectProducer | _: ObjectConsumer | _: TypedFilter => true
+      case n => n.expressions.exists(_.exists(opaqueExpr))
+    }
+    if (opaque || leaves.contains(None)) None
+    else {
+      val canon = plan.canonicalized
+      // in full: a truncated field list could hide a changed expression
+      val conf = spark.sessionState.conf.clone()
+      conf.setConf(SQLConf.MAX_TO_STRING_FIELDS, Int.MaxValue)
+      val rendered = SQLConf.withExistingConf(conf) {
+        (canon +: canon.subqueriesAll).map(
+          _.treeString(true, false, Int.MaxValue, false, false))
+      }
+      Some(digest(Seq(m.materialization.toString, df.schema.json,
+        spark.sessionState.conf.getAllConfs.toSeq.sorted.mkString("\n")) ++
+        rendered ++ leaves.flatten))
+    }
+  } catch { case NonFatal(_) => None }
+}
+
+object DagRunner {
+
+  /** A file as (path, length, mtime). */
+  private type FileId = (String, Long, Long)
+
+  /** What this JVM's last publish of a table left: the skip key of the
+    * run that wrote it (None: a run that may not be skipped) and the
+    * table's files right after the commit.
+    */
+  private final case class Published(key: Option[String], files: Seq[FileId])
+
+  /** Per table path. Bounded like [[graft.core.Staged]]'s schema memo:
+    * past [[PublishedMax]] entries it is cleared wholesale (a miss
+    * costs one rebuild).
+    */
+  private val PublishedMax = 512
+  private val published =
+    new java.util.concurrent.ConcurrentHashMap[String, Published]()
+  private def record(path: String, p: Published): Unit = {
+    if (published.size() > PublishedMax) published.clear()
+    published.put(path, p)
+    ()
+  }
+
+  /** A batch file scan, described by everything that decides its rows;
+    * None for any other leaf.
+    */
+  private def fileLeaf(l: LeafNode): Option[String] = l match {
+    case LogicalRelation(h: HadoopFsRelation, _, _, false, _) =>
+      h.location match {
+        case index: PartitioningAwareFileIndex =>
+          val files = index.allFiles()
+            .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+          Some(Seq(h.fileFormat.toString, h.options.toSeq.sorted.toString,
+            h.dataSchema.json, h.partitionSchema.json, h.bucketSpec.toString,
+            files.sorted.toString).mkString("\n"))
+        case _ => None
+      }
+    case _ => None
+  }
+
+  /** A UDF, a closure-backed aggregate or object, a non-deterministic
+    * expression or one that reads the clock.
+    */
+  private def opaqueExpr(e: Expression): Boolean = e match {
+    case _: UserDefinedExpression | _: UserDefinedGenerator |
+        _: TypedAggregateExpression => true
+    case Literal(_, _: ObjectType) => true
+    case _: CurrentTimestampLike | _: CurrentDate | _: CurrentTime => true
+    case _ => !e.deterministic
+  }
+
+  private def digest(parts: Seq[String]): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(parts.mkString("\u0000").getBytes(
+        java.nio.charset.StandardCharsets.UTF_8))
+      .map("%02x".format(_)).mkString
 }

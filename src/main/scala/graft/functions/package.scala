@@ -55,9 +55,6 @@ package object functions {
   /** BigQuery FORMAT_DATE('%Y%m%d', d). */
   def dateInt(d: Column): Column = date_format(d, "yyyyMMdd")
 
-  /** BigQuery DATE_SUB(d, INTERVAL 1 YEAR) — calendar-aware. */
-  def subOneYear(d: Column): Column = add_months(d, -12)
-
   /** Deterministic cross-engine rounding: floor(x·10^s + 0.5)/10^s on the
     * binary double. Unlike Spark's `round` (which re-parses the shortest
     * decimal repr via BigDecimal, so 8949.4249999… "rounds" as 8949.425),

@@ -584,19 +584,6 @@ object Bpe {
       Some(stateDir), persistEvery)
   }
 
-  /** Convenience twin of [[train]]'s signature over raw text. */
-  def trainScaled(df: DataFrame, textCol: String = "text",
-      numMerges: Int = 16, minCount: Long = 2L,
-      wordFilter: Column => Column = _ => lit(true),
-      batchCap: Int = 64, viewSize: Int = 512,
-      checkpointEvery: Int = 12, stateDir: Option[String] = None,
-      persistEvery: Int = 25): Seq[Merge] =
-    trainScaledWords(
-      wordFreqs(df, textCol).filter(wordFilter(col("word")))
-        .select(charSymbols(col("word")).as("syms"), col("freq")),
-      numMerges, minCount, batchCap, viewSize, checkpointEvery,
-      stateDir, persistEvery)
-
   /** Pass count of a scaled-training run, noted when it ends: each pass
     * is ONE count-table collect + ONE map-only rewrite + ONE delta
     * aggregation over changed words, so passes ≪ merges is the

@@ -25,13 +25,6 @@ final case class IvfQuantizer(centroids: Seq[Seq[Double]],
   def subCid(parent: Int, child: Int): Int =
     IvfQuantizer.SubBase + parent * IvfQuantizer.MaxSub + child
 
-  /** Every live cell id a level-1 assignment can resolve to. */
-  def cellsOf(level1: Int): Seq[Int] =
-    splits.get(level1) match {
-      case Some(subs) => subs.indices.map(subCid(level1, _))
-      case None => Seq(level1)
-    }
-
   /** Hierarchical cell assignment for an `array<double>` vector. */
   def cidExpr(vec: Column): Column = {
     val base = element_at(

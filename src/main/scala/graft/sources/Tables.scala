@@ -173,16 +173,6 @@ object Tables {
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .json(path)
 
-  /** S4 — CSV scan with header + schema inference, as the historic-trips
-    * loader (reference `src/historical_bucket_to_bq.py:57-62`). At 100 TB
-    * inferSchema is a full extra pass; prefer `csvWithSchema`.
-    */
-  def csvInferred(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .option("header", "true")
-      .option("inferSchema", "true")
-      .csv(path)
-
   /** S4 at scale — explicit schema, single pass. */
   def csvWithSchema(spark: SparkSession, path: String, ddl: String): DataFrame =
     spark.read.option("header", "true").schema(ddl).csv(path)

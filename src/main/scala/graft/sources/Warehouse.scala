@@ -466,21 +466,6 @@ object Warehouse {
     }
   }
 
-  /** Read a delta-log table as one scan PER generation, unioned by name
-    * — required when generations are hive-partitioned (a single
-    * multi-path `spark.read.parquet(gens: _*)` cannot infer partition
-    * columns across sibling roots), and equivalent to [[deltaRead]]
-    * otherwise. Filters push through the Union into every scan, so
-    * partition pruning applies generation by generation.
-    */
-  def deltaReadEach(spark: SparkSession, root: String,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
-    val paths = committedGenerations(spark, root).map(gen => s"$root/$gen")
-    require(paths.nonEmpty, s"no delta-log generations under $root")
-    paths.map(p => readerWith(spark, schema).parquet(p))
-      .reduce(_.unionByName(_))
-  }
-
   /** DataFrameReader with the caller's KNOWN schema applied when given.
     * An engine knows its own index/table schemas statically (the writer
     * code three lines up defines them), and supplying the schema skips

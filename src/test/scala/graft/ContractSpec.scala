@@ -355,6 +355,17 @@ class ContractSpec extends SparkSpec {
       s"commit through AtomicFiles.publish instead: ${offenders.mkString(", ")}")
   }
 
+  // A dbt table is read through DagRunner's pinned read (graft.core.
+  // Staged.read) alone; a bare parquet read would run a footer-inference
+  // job per read and bypass the check that re-infers a table rewritten
+  // outside the runner.
+  test("dbt table reads go through the pinned read only") {
+    val (files, offenders) = sourcesContaining("src/main/scala/graft/dbt",
+      Seq("spark.read.parquet("))
+    assert(files.nonEmpty && offenders.isEmpty,
+      s"read through DagRunner.read instead: ${offenders.mkString(", ")}")
+  }
+
   // Diagnostics reach their readers through graft.core.Trace captures
   // alone; a process-global @volatile var or a ThreadLocal holder is a
   // side channel that a concurrent caller can clobber and that no

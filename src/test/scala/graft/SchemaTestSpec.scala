@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.lit
 import graft.dbt._
 import graft.dbt.SchemaTest._
 
@@ -40,6 +41,43 @@ class SchemaTestSpec extends SparkSpec {
       .violations(child, _ => parent)
     assert(v.count() == 1)
     assert(v.head().getInt(0) == 99)
+  }
+
+  test("fused counts equal per-test counts, above the cap too") {
+    val parents = Seq(1, 2).toDF("pk")
+    val resolve: String => DataFrame = {
+      case "parents" => parents
+      case n => sys.error(s"unexpected resolve $n")
+    }
+    val tests = Seq(NotNull("k"), Unique("k"),
+      AcceptedValues("s", Seq("ok")), Relationships("k", "parents", "pk"),
+      NotNull("s"))
+    val broken = Seq((Some(1), "ok"), (Some(1), "bad"), (None, null),
+      (Some(3), "bad"), (Some(2), "ok")).toDF("k", "s")
+    // 1,000,001 rows with a NULL k and a stranger s: both capped
+    val huge = spark.range(Cap + 1L)
+      .select(lit(null).cast("int").as("k"), lit("bad").as("s"))
+    def perTest(df: DataFrame) = tests.map(t => (s"m.${t.testName}",
+      t.violations(df, resolve).limit(Cap).count()))
+    val fused = SchemaTest.report("m", tests, broken, resolve)
+    assert(fused == perTest(broken))
+    assert(fused.map(_._2) == Seq(1L, 1L, 2L, 1L, 1L))
+    val capped = SchemaTest.report("m", tests, huge, resolve)
+    assert(capped == perTest(huge))
+    assert(capped.map(_._2) == Seq(Cap.toLong, 1L, Cap.toLong, 0L, 0L))
+  }
+
+  test("a model's row-local tests run as one query") {
+    val df = Seq((Some(1), "ok"), (None, "bad")).toDF("k", "s")
+    val tests = Seq(NotNull("k"), AcceptedValues("s", Seq("ok")),
+      NotNull("s"))
+    var report = Seq.empty[(String, Long)]
+    val (_, queries) = sparkWork {
+      report = SchemaTest.report("m", tests, df, resolveNothing)
+    }
+    assert(queries == 1)
+    assert(report == Seq("m.not_null_k" -> 1L,
+      "m.accepted_values_s" -> 1L, "m.not_null_s" -> 0L))
   }
 
   test("DagRunner fails the run when a declared test fails") {

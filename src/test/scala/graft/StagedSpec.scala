@@ -1,7 +1,6 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.core.Staged
 
 /** The one staging primitive: build-once under concurrency, retry after
@@ -10,31 +9,6 @@ import graft.core.Staged
   */
 class StagedSpec extends SparkSpec {
   import spark.implicits._
-
-  /** Spark jobs started while running `body`. The listener bus is
-    * asynchronous and FIFO, so a sentinel job run afterwards marks the
-    * point by which every earlier job start has been delivered.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val sentinel = "staged-spec-sentinel"
-    val jobs = new AtomicInteger
-    val seen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(p =>
-            p.getProperty("spark.job.description") == sentinel)) seen.countDown()
-        else { jobs.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      spark.sparkContext.setJobDescription(sentinel)
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setJobDescription(null)
-      assert(seen.await(30, java.util.concurrent.TimeUnit.SECONDS))
-      jobs.get
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
 
   test("concurrent callers of one key build it once") {
     val builds = new AtomicInteger
